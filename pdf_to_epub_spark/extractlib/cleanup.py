@@ -15,7 +15,10 @@ the filesystem or wall clock.
 
 from __future__ import annotations
 
+import bisect
+import itertools
 import re
+from typing import Iterable
 
 # --------------------------------------------------------------------------
 # Pass 1a: running-head / footer block removal
@@ -29,11 +32,14 @@ _ANCHOR_SERIES = re.compile(r"(?i)\bhistory\s+of\s+my\s+life\b")
 _ANCHOR_EITHER = re.compile(r"(?i)\bvolume\b|\bhistory\s+of\s+my\s+life\b")
 _INLINE_CHAPTER = re.compile(r"(?i)\bchapter\b")
 
-# Header-ish line shapes.
-_BULLET_LINE = re.compile(r"^\s*[•·]\s*$")
-_PUNCT_LINE = re.compile(r'^\s*[\.,;:!?—–\-\"“”„‟’\']+\s*$')
-_QUOTE_LINE = re.compile(r'^\s*[\"\'“”„‟’]+\s*$')
-_NUMERIC_LINE = re.compile(r"^\s*(?:\d{1,4}|[IVXLCDM]+)\.?\s*$")
+# Header-ish line shapes, matched against stripped lines.  The reference
+# tests ^\s*X\s*$ for a bullet, a punctuation run, a quote run and a page
+# number; on a stripped line that is a fullmatch of X, and the quote class
+# is a subset of the punctuation class, so two alternations cover all four.
+_BULLET_PUNCT_OR_NUMBER = re.compile(
+    r'[•·]|[\.,;:!?—–\-\"“”„‟’\']+|(?:\d{1,4}|[IVXLCDM]+)\.?'
+)
+_PUNCT_OR_NUMBER = re.compile(r'[\.,;:!?—–\-\"“”„‟’\']+|(?:\d{1,4}|[IVXLCDM]+)\.?')
 
 # A real (protected) chapter heading, in strict ALL-CAPS form.
 _ALLCAPS_CHAPTER = re.compile(r"^\s*CHAPTER\s+(?:[IVXLCDM]+|[A-Z0-9]+)\s*$")
@@ -62,10 +68,63 @@ def normalize_newlines(text: str) -> str:
     return text
 
 
-def first_protected_heading(lines: list[str]) -> int | None:
-    """Index of the first case-insensitive ``chapter <roman>`` own-line."""
-    for idx, raw in enumerate(lines):
-        if _CHAPTER_ANYCASE.match(raw.strip()):
+# Chars that sre's IGNORECASE table matches against a letter of "volume",
+# "history" or "chapter" besides the ASCII letters themselves (exhaustive
+# sweep over all of Unicode), and the line breaks that do not survive a
+# Latin-1 encode, each mapped to a one-char stand-in.  "\x0b" stands in for
+# a break because, unlike "\n", it never pairs with a preceding "\r".
+_FOLD_FIXES = (("İ", "i"), ("ı", "i"), ("ſ", "s"), ("\u2028", "\x0b"), ("\u2029", "\x0b"))
+# str.splitlines() boundaries other than "\n" itself.
+LINE_BREAKS = ("\r", "\x0b", "\x0c", "\x1c", "\x1d", "\x1e", "\x85", "\u2028", "\u2029")
+
+
+def _fold_for_anchors(text: str) -> str:
+    """``text`` with every char that sre's IGNORECASE matches against a
+    letter of "volume", "history" or "chapter" turned into that letter,
+    same length and same line breaks — so `(?i)\\bvolume\\b` and friends can
+    only match where the fold holds the plain lowercase word.  (str.casefold
+    is NOT enough: sre matches `i` against ı, which casefold keeps, and
+    against İ, which it turns into two chars.)  Everything else maps to
+    itself, or to "?" outside Latin-1; a bytes pass does the ASCII lowering
+    at a fraction of casefold's per-char cost."""
+    if text.isascii():
+        return text.lower()
+    for ch, to in _FOLD_FIXES:
+        if ch in text:
+            text = text.replace(ch, to)
+    return text.encode("latin-1", "replace").lower().decode("latin-1")
+
+
+def _lines_holding(text: str, words: tuple[str, ...]) -> set[int]:
+    """Indexes, in ``text.splitlines()``, of the lines holding any of
+    ``words`` (which hold no line break)."""
+    hits = []
+    for word in words:
+        i = text.find(word)
+        while i != -1:
+            hits.append(i)
+            i = text.find(word, i + 1)
+    if not hits:
+        return set()
+    hits.sort()
+    if any(sep in text for sep in LINE_BREAKS):
+        ends = list(itertools.accumulate(map(len, text.splitlines(True))))
+        return {bisect.bisect_right(ends, p) for p in hits}
+    found = set()
+    line = prev = 0
+    for p in hits:
+        line += text.count("\n", prev, p)
+        prev = p
+        found.add(line)
+    return found
+
+
+def _first_protected_heading(lines: list[str], candidates: Iterable[int]) -> int | None:
+    """Index of the first case-insensitive ``chapter <roman>`` own-line,
+    trying only ``candidates`` (sorted indexes of the lines that can
+    match)."""
+    for idx in candidates:
+        if _CHAPTER_ANYCASE.match(lines[idx].strip()):
             return idx
     return None
 
@@ -85,28 +144,28 @@ def strip_running_heads(
     the protected-heading logic; `diff` confirms nothing else changed) —
     the T26-adjacent variant the SURVEY scoped as legacy.
     """
-    # Casefold prescreen: `(?i)\bvolume\b` / `(?i)\bhistory\s+of\s+my\s+life\b`
+    # Fold prescreen: `(?i)\bvolume\b` / `(?i)\bhistory\s+of\s+my\s+life\b`
     # can only match where the folded text contains the contiguous literal
-    # "volume" / "history".  str.casefold alone is NOT sufficient for re's
-    # IGNORECASE table: sre matches `i` against dotless ı (U+0131, folds to
-    # itself) and dotted İ (U+0130, folds to "i"+U+0307, breaking
-    # contiguity) — so fold those two back to plain "i".  With that, an
-    # exhaustive sweep over all of Unicode shows every char sre-matches
-    # against an anchor letter folds to exactly that letter; false
-    # positives just fall through to the regex.  Neither replacement nor
-    # casefold introduces/removes line breaks, so folded_lines below stays
-    # 1:1 with lines.
-    folded = text.casefold().replace("ı", "i").replace("̇", "")
+    # "volume" / "history" (and `(?i)\bchapter\b` only where it holds
+    # "chapter"); false positives just fall through to the regex.
+    folded = _fold_for_anchors(text)
     if "volume" not in folded and "history" not in folded:
         counters.setdefault("header_footer_blocks_removed", 0)
         return text
 
     lines = text.splitlines()
     n = len(lines)
+    anchor_lines = _lines_holding(folded, ("volume", "history"))
+    chapter_lines = _lines_holding(folded, ("chapter",))
     protected = (
-        first_protected_heading(lines) if protect_chapter_heading else None
+        _first_protected_heading(lines, sorted(chapter_lines))
+        if protect_chapter_heading
+        else None
     )
-    folded_lines = folded.splitlines()
+
+    # _ALLCAPS_CHAPTER needs the literal "CHAPTER": test that first.
+    def allcaps_chapter(s: str) -> bool:
+        return "CHAPTER" in s and _ALLCAPS_CHAPTER.match(s) is not None
 
     def headerish(idx: int) -> bool:
         if protected is not None and idx == protected:
@@ -114,13 +173,11 @@ def strip_running_heads(
         s = lines[idx].strip()
         if s == "":
             return True
-        if _BULLET_LINE.match(s) or _PUNCT_LINE.match(s) or _QUOTE_LINE.match(s):
+        if _BULLET_PUNCT_OR_NUMBER.fullmatch(s):
             return True
-        if _NUMERIC_LINE.match(s):
+        if idx in anchor_lines and _ANCHOR_EITHER.search(s):
             return True
-        if _ANCHOR_EITHER.search(s):
-            return True
-        if _INLINE_CHAPTER.search(s) and not _ALLCAPS_CHAPTER.match(s):
+        if idx in chapter_lines and _INLINE_CHAPTER.search(s) and not allcaps_chapter(s):
             return True
         return False
 
@@ -128,7 +185,7 @@ def strip_running_heads(
         s = lines[idx].strip()
         if s == "":
             return False
-        if _ALLCAPS_CHAPTER.match(s):
+        if allcaps_chapter(s):
             return True
         if _LOWERCASE_LETTER.search(s):
             return True
@@ -139,17 +196,10 @@ def strip_running_heads(
     ranges: list[tuple[int, int]] = []
     claimed: set[int] = set()
 
-    for i in range(n):
+    for i in sorted(anchor_lines):
         if i in claimed:
             continue
-        # Same casefold prescreen, per line (memchr-speed `in` vs a
-        # char-at-a-time alternation scan); casefold is char-wise so
-        # folded_lines aligns 1:1 with lines.
-        low = folded_lines[i]
-        if "volume" not in low and "history" not in low:
-            continue
-        raw = lines[i]
-        if not _ANCHOR_EITHER.search(raw):
+        if not _ANCHOR_EITHER.search(lines[i]):
             continue
 
         lo = i
@@ -157,7 +207,7 @@ def strip_running_heads(
             lo - 1 >= 0
             and (lo - 1 != protected)
             and headerish(lo - 1)
-            and not _ALLCAPS_CHAPTER.match(lines[lo - 1].strip())
+            and not allcaps_chapter(lines[lo - 1].strip())
         ):
             lo -= 1
         hi = i
@@ -165,7 +215,7 @@ def strip_running_heads(
             hi + 1 < n
             and (hi + 1 != protected)
             and headerish(hi + 1)
-            and not _ALLCAPS_CHAPTER.match(lines[hi + 1].strip())
+            and not allcaps_chapter(lines[hi + 1].strip())
         ):
             hi += 1
 
@@ -175,9 +225,7 @@ def strip_running_heads(
         taken = 0
         while k >= 0 and taken < 3:
             s = lines[k].strip()
-            if s and (k != protected) and (
-                _NUMERIC_LINE.match(s) or _PUNCT_LINE.match(s) or _QUOTE_LINE.match(s)
-            ):
+            if s and k != protected and _PUNCT_OR_NUMBER.fullmatch(s):
                 lo = k
                 taken += 1
                 k -= 1
@@ -187,9 +235,7 @@ def strip_running_heads(
         taken = 0
         while k < n and taken < 3:
             s = lines[k].strip()
-            if s and (k != protected) and (
-                _NUMERIC_LINE.match(s) or _PUNCT_LINE.match(s) or _QUOTE_LINE.match(s)
-            ):
+            if s and k != protected and _PUNCT_OR_NUMBER.fullmatch(s):
                 hi = k
                 taken += 1
                 k += 1
@@ -227,18 +273,21 @@ def strip_running_heads(
             cur_lo, cur_hi = lo, hi
     merged.append((cur_lo, cur_hi))
 
-    doomed: set[int] = set()
+    kept: list[str] = []
     samples: list[str] = []
+    prev = 0
     for lo, hi in merged:
-        doomed.update(range(lo, hi + 1))
+        kept += lines[prev:lo]
+        prev = hi + 1
         samples.append("\n".join(lines[lo : hi + 1])[:200])
+    kept += lines[prev:]
 
     counters["header_footer_blocks_removed"] = len(merged)
     if protected is not None:
         counters["protected_first_chapter_idx"] = protected
     if samples:
         counters["header_footer_examples"] = samples[:5]
-    return "\n".join(ln for idx, ln in enumerate(lines) if idx not in doomed)
+    return "\n".join(kept)
 
 
 # --------------------------------------------------------------------------
@@ -308,9 +357,6 @@ def _repair_word_mojibake_regex(text: str) -> str:
 # (reference Step1_ocr_cleanup_v11.py:30-54)
 # --------------------------------------------------------------------------
 
-_CHAPTER_LINE_MULTI = re.compile(r"(?m)^\s*CHAPTER\s+(?:[IVXLCDM]+|[A-Z0-9]+)\s*$")
-_VOLUME_LINE_MULTI = re.compile(r"(?m)^\s*Volume\s+\S.*$")
-
 
 def _reinsert_at_top(text: str, line: str) -> str:
     lines = text.splitlines()
@@ -321,20 +367,61 @@ def _reinsert_at_top(text: str, line: str) -> str:
     return "\n".join(lines)
 
 
+# The reference's (?m)^\s*CHAPTER\s+(?:[IVXLCDM]+|[A-Z0-9]+)\s*$ and
+# (?m)^\s*Volume\s+\S.*$, from their literal on: a (?m)^\s* head makes re
+# try every position of the text, while the literal is found at memchr
+# speed and the head is checked on the few lines that hold it.
+_CHAPTER_LINE_TAIL = re.compile(r"(?m)\s+(?:[IVXLCDM]+|[A-Z0-9]+)\s*$")
+_VOLUME_LINE_TAIL = re.compile(r"\s+\S.*")
+
+
+def _line_head_is_blank(text: str, i: int) -> bool:
+    r"""Whether only whitespace precedes ``text[i]`` since the last "\n"
+    (where a (?m)^\s* can start and still reach ``i``)."""
+    head = text[text.rfind("\n", 0, i) + 1 : i]
+    return not head or head.isspace()
+
+
+def _first_line_match(text: str, literal: str, tail: re.Pattern) -> str | None:
+    r"""== m.group(0).strip() for the first match of (?m)^\s*<literal><tail>
+    (None when there is none).  Matches start at a line start, so the first
+    one belongs to the first occurrence of the literal that has only
+    whitespace before it on its line and a tail match after it."""
+    i = text.find(literal)
+    while i != -1:
+        if _line_head_is_blank(text, i):
+            m = tail.match(text, i + len(literal))
+            if m:
+                return text[i : m.end()].strip()
+        i = text.find(literal, i + 1)
+    return None
+
+
+def _has_own_line(text: str, line: str) -> bool:
+    r"""== re.search(r"(?m)^\s*" + re.escape(line) + r"\s*$", text) is not
+    None: some occurrence of ``line`` has only whitespace before it since
+    the last "\n" and only whitespace after it up to the next one."""
+    i = text.find(line)
+    while i != -1:
+        j = i + len(line)
+        end = text.find("\n", j)
+        tail = text[j:] if end == -1 else text[j:end]
+        if (not tail or tail.isspace()) and _line_head_is_blank(text, i):
+            return True
+        i = text.find(line, i + 1)
+    return False
+
+
 def reinstate_protected_lines(text: str, original_text: str) -> str:
     """If cleanup dropped the first ALL-CAPS chapter heading or the first
     ``Volume …`` line of the *original* document, put it back at the top."""
-    m = _CHAPTER_LINE_MULTI.search(original_text)
-    if m:
-        heading = m.group(0).strip()
-        if not re.search(r"(?m)^\s*" + re.escape(heading) + r"\s*$", text):
-            text = _reinsert_at_top(text, heading)
+    heading = _first_line_match(original_text, "CHAPTER", _CHAPTER_LINE_TAIL)
+    if heading is not None and not _has_own_line(text, heading):
+        text = _reinsert_at_top(text, heading)
 
-    m = _VOLUME_LINE_MULTI.search(original_text)
-    if m:
-        vol = m.group(0).strip()
-        if not re.search(r"(?m)^\s*" + re.escape(vol) + r"\s*$", text):
-            text = _reinsert_at_top(text, vol)
+    vol = _first_line_match(original_text, "Volume", _VOLUME_LINE_TAIL)
+    if vol is not None and not _has_own_line(text, vol):
+        text = _reinsert_at_top(text, vol)
 
     return text
 

@@ -13,6 +13,8 @@ import functools
 import re
 import string
 
+from .cleanup import LINE_BREAKS
+
 # --------------------------------------------------------------------------
 # Replacement tables (reference Step2_formatting_v14.py:327-344).
 # Held as ordered pair tuples because ordering matters: e.g. "Ã‚"→"Â" runs
@@ -74,7 +76,52 @@ DEFAULT_MONEY_TERMS: frozenset[str] = frozenset({
 # tests/test_parity.py goldens, the reference-CLI differential fuzz suite,
 # and test_fastpath_differential in tests/test_fuzz_parity.py (random +
 # corpus inputs compared against the original regex form).
+#
+# Cost model behind the rewrites (CPython 3.11 re; per-char figures from a
+# 4-core Xeon VM): a pattern whose first item is a literal is searched at
+# memchr speed and only tried where that literal occurs; a pattern that
+# starts with a group, an alternation, a lookbehind or a character class is
+# tried at EVERY position, ~10 ns/char for an ASCII class and more for \s,
+# \d or a non-ASCII class; a lazy
+# ``[^"]*?`` costs a step per char, and a greedy class that has to give
+# characters back costs one per char again.  So the hot patterns are
+# reshaped, never re-specified: a leading class of N literals becomes N
+# literal-led patterns applied in turn (only where their matches cannot
+# touch each other — each such split says why), a lazy or backtracking
+# class that cannot cross its delimiter becomes possessive (``*+``, same
+# matches), and per-line ``^``/``$`` patterns run once over the whole text
+# in (?m) mode with ``\s`` kept off "\n" (exact once the text is in
+# "\n".join(splitlines()) form, see _join_lines).
+#
+# Gates.  A pass that almost never changes its input starts with an exact
+# no-op check: when the check fails, the pass provably returns its input
+# (in "\n".join(splitlines()) form if it splits lines) and the skipped body
+# writes the same counters it would have written.  Rules for a gate:
+#   * it tests a NECESSARY condition of every rewrite the pass can make
+#     (false positives just run the full pass; a false negative is a bug);
+#   * it uses `in` / str.find / str.count, or a regex that starts with a
+#     literal — never `(?m)^\s*...`, an alternation, or a non-ASCII class
+#     such as ['’] or a class of line separators: those scan every char and
+#     cost about as much as the pass they were meant to skip (a whole-text
+#     (?m)^\s*"\s+[“"] probe costs as much as the whole
+#     close_prev_and_drop_stray_quote pass it would gate);
+#   * single-char `in` is the cheapest probe (memchr); a 2-char needle is
+#     already ~1.5 ns/char, so gates prefer a rare single char first.
+# Every gated or rewritten pass is pinned against its original body by a
+# hypothesis differential in tests/test_fuzz_parity.py.
 # --------------------------------------------------------------------------
+
+def _join_lines(text: str) -> str:
+    """== "\\n".join(text.splitlines()).  Text with no boundary but "\\n"
+    and no trailing "\\n" is already in that form (one memchr per
+    boundary char instead of a split and a join)."""
+    if text.endswith("\n"):
+        return "\n".join(text.splitlines())
+    for sep in LINE_BREAKS:
+        if sep in text:
+            return "\n".join(text.splitlines())
+    return text
+
 
 _ASCII_LETTERS = frozenset(string.ascii_letters)
 _WS_PROBE = re.compile(r"\s")
@@ -173,21 +220,25 @@ def _collapse_space_runs(text: str) -> str:
     return "".join(out)
 
 
-_PUNCT_AFTER_WS = (",", ".", ";", ":", "?", "!")
+# One literal-led probe per punctuation char: the literal is found at
+# memchr speed and the lookbehind checks the char before it, so only
+# punctuation preceded by whitespace ever becomes a match object.
+_WS_THEN_PUNCT = tuple(
+    re.compile(re.escape(p) + r"(?<=\s" + re.escape(p) + ")")
+    for p in (",", ".", ";", ":", "?", "!")
+)
+
+
+def _ws_before_punct(text: str) -> list[int]:
+    """Positions of every [,.;:?!] char whose left neighbour is \\s."""
+    return [m.start() for probe in _WS_THEN_PUNCT for m in probe.finditer(text)]
 
 
 def _strip_space_before_punct(text: str) -> str:
     """== _SPACE_BEFORE_PUNCT.sub(r"\\1", text)  (r"\\s+([,.;:?!])" -> the
-    punctuation char).  Candidate punctuation positions come from memchr
-    scans; whitespace runs never contain punctuation, so match spans are
-    disjoint and original-text candidates are exact."""
-    hits = []
-    for p in _PUNCT_AFTER_WS:
-        i = text.find(p)
-        while i != -1:
-            if i > 0 and _is_ws(text[i - 1]):
-                hits.append(i)
-            i = text.find(p, i + 1)
+    punctuation char).  Whitespace runs never contain punctuation, so match
+    spans are disjoint and original-text candidates are exact."""
+    hits = _ws_before_punct(text)
     if not hits:
         return text
     hits.sort()
@@ -273,6 +324,28 @@ def _collapse_midsentence(text: str) -> tuple[str, int]:
     return "".join(out), count
 
 
+def _break_at_gap(pattern: re.Pattern, text: str) -> tuple[str, int]:
+    """== pattern.subn(...) for the dialogue patterns whose replacement
+    keeps every char of the match except the whitespace run in group 1,
+    which becomes "\\n\\n".  One slice per rewritten gap instead of a
+    template expansion per match (re expands group templates in Python);
+    a gap that already is "\\n\\n" is counted but left in place."""
+    out = []
+    pos = 0
+    hits = 0
+    for m in pattern.finditer(text):
+        hits += 1
+        if m.group(1) != "\n\n":
+            start, end = m.span(1)
+            out.append(text[pos:start])
+            out.append("\n\n")
+            pos = end
+    if not out:
+        return text, hits
+    out.append(text[pos:])
+    return "".join(out), hits
+
+
 # --------------------------------------------------------------------------
 # Pass 2.0 — mojibake pre-pass (reference Step2_formatting_v14.py:514-517)
 # --------------------------------------------------------------------------
@@ -283,6 +356,8 @@ def bare_mojibake_prepass(text: str, counters: dict) -> str:
     before anything else.  NB: the second char of both keys is the
     *invisible* control char U+0080 (double-mojibake), not U+20AC — the
     visible ``â€¢`` artifact is handled later by the artifact sweep."""
+    if "\x80" not in text:  # both keys hold U+0080
+        return text
     text = text.replace("â¢", "")
     return text.replace("â", '"')
 
@@ -292,54 +367,96 @@ def bare_mojibake_prepass(text: str, counters: dict) -> str:
 # (reference Step2_formatting_v14.py:346-373)
 # --------------------------------------------------------------------------
 
-_MULTI_DQUOTE = re.compile(r'"{2,}')
+def _collapse_dquote_runs(text: str) -> tuple[str, int]:
+    """== re.subn(r'"{2,}', '"', text): every run of 2+ double quotes
+    becomes one."""
+    i = text.find('""')
+    if i == -1:
+        return text, 0
+    out = []
+    pos = 0
+    n = len(text)
+    runs = 0
+    while i != -1:
+        j = i + 2
+        while j < n and text[j] == '"':
+            j += 1
+        out.append(text[pos:i])
+        out.append('"')
+        runs += 1
+        pos = j
+        i = text.find('""', pos)
+    out.append(text[pos:])
+    return "".join(out), runs
+
+
+def _lead_pairs(text: str, leads: str) -> set[str]:
+    """Each lead char of ``leads`` present in ``text``, plus every 2-char
+    substring of ``text`` that starts with one."""
+    seen = set()
+    for lead in leads:
+        i = text.find(lead)
+        if i != -1:
+            seen.add(lead)
+        while i != -1:
+            seen.add(text[i : i + 2])
+            i = text.find(lead, i + 1)
+    return seen
+
+
+# A replacement that yields a lead char or the tail char of a key can
+# create an occurrence of a later key ("Ã‚" → "Â" before "Â«"), and so can
+# a deletion, which joins its two neighbours.  No replacement removes an
+# occurrence of a later key: a key's tail is never a lead, nor a lead a tail.
+_KEY_MAKERS = frozenset("ÃÅÂ") | frozenset(bad[1] for bad, _ in MOJIBAKE_PAIRS if bad[1:])
 
 
 def sweep_mojibake_and_artifacts(text: str, counters: dict) -> str:
     by_noun: dict[str, int] = {}
     by_pair: dict[str, int] = {}
     by_artifact: dict[str, int] = {}
-    # Byte-safe prechecks: counting an absent token yields 0 and the
-    # reference logs only nonzero counts, so skipping a key family whose
-    # lead char is absent is the identity.  Lead-char presence is
-    # recomputed between families because earlier replacements can CREATE
-    # later leads (e.g. "Ã‚" → "Â", "Ã¢" → "â").
-    if "Ã" in text:
-        for bad, good in PROPER_NOUN_PAIRS:
-            c = text.count(bad)
-            if c:
+    # Counting an absent key yields 0 and the reference logs only nonzero
+    # counts, so skipping a key that cannot occur is the identity.  Every
+    # table key starts with Ã, Å, Â or â, and a key of 2+ chars can occur
+    # only if its first two chars are a lead pair of the text (one memchr
+    # walk per lead instead of a full-text count per key).  Every key
+    # shrinks when replaced, so its count is the length lost over the
+    # length one replacement loses.
+    if "Ã" in text or "Â" in text or "Å" in text:
+        seen = _lead_pairs(text, "ÃÅÂ")
+        if "Ã©" in seen or "Ã‰" in seen:  # every proper-noun key holds one
+            for bad, good in PROPER_NOUN_PAIRS:
+                before = len(text)
                 text = text.replace(bad, good)
-                by_noun[bad] = c
+                if len(text) != before:
+                    by_noun[bad] = (before - len(text)) // (len(bad) - len(good))
+            if by_noun:
+                seen = _lead_pairs(text, "ÃÅÂ")
         for bad, good in MOJIBAKE_PAIRS:
-            c = text.count(bad)
-            if c:
-                text = text.replace(bad, good)
-                by_pair[bad] = c
-    elif "Â" in text or "Å" in text:
-        for bad, good in MOJIBAKE_PAIRS:
-            if bad[0] == "Ã":
+            if bad not in seen:  # every key here is 1 or 2 chars
                 continue
-            c = text.count(bad)
-            if c:
-                text = text.replace(bad, good)
-                by_pair[bad] = c
+            before = len(text)
+            text = text.replace(bad, good)
+            by_pair[bad] = (before - len(text)) // (len(bad) - len(good))
+            if not good or good in _KEY_MAKERS:
+                seen = _lead_pairs(text, "ÃÅÂ")
     if "â" in text or "Â" in text:
+        seen = _lead_pairs(text, "âÂ")
         for token in ARTIFACT_TOKENS:
-            c = text.count(token)
-            if c:
-                text = text.replace(token, "")
-                by_artifact[token] = c
+            if token[:2] not in seen:
+                continue
+            before = len(text)
+            text = text.replace(token, "")
+            if len(text) != before:
+                by_artifact[token] = (before - len(text)) // len(token)
+                seen = _lead_pairs(text, "âÂ")
     shapes = 0
     if not text.isascii():
         for shape, straight in QUOTE_SHAPES:
-            c = text.count(shape)
-            if c:
+            if shape in text:
+                shapes += text.count(shape)
                 text = text.replace(shape, straight)
-                shapes += c
-    if '""' in text:  # pattern requires two adjacent double quotes
-        text, collapsed = _MULTI_DQUOTE.subn('"', text)
-    else:
-        collapsed = 0
+    text, collapsed = _collapse_dquote_runs(text)
     counters["french_fixes"] = {"specific": by_noun, "mojibake": by_pair}
     counters["artifacts_removed"] = by_artifact
     counters["quotes_normalized"] = {
@@ -357,7 +474,6 @@ def sweep_mojibake_and_artifacts(text: str, counters: dict) -> str:
 _HYPHEN_WRAP = re.compile(r"([A-Za-z])-(?:\n)([A-Za-z])")
 _SPACE_RUN = re.compile(r"[ \t]{2,}")
 _SPACE_BEFORE_PUNCT = re.compile(r"\s+([,.;:?!])")
-_MISSING_SPACE_AFTER_STOP = re.compile(r"([.!?])([A-Za-z])")
 _BLANK_RUN = re.compile(r"\n{3,}")
 
 _PARA_SENTINEL = "<<<P>>>"
@@ -371,18 +487,39 @@ def _join_hyphen_wrap(m: re.Match) -> str:
     return head + "-" + tail
 
 
+# The reference's ([.!?])([A-Za-z]) -> "\1 \2", split per stop char.  A
+# match is two chars, a stop then an ASCII letter, so matches of different
+# stops never overlap and the inserted space cannot start or end another
+# match: the three literal-led subs in turn equal the one class-led sub.
+# The letter moves into a lookahead; it is never a stop, so not consuming
+# it changes nothing.
+_STOP_THEN_LETTER = tuple(
+    (re.compile(re.escape(stop) + "(?=[A-Za-z])"), stop + " ") for stop in ".!?"
+)
+
+
+def _space_after_stop(text: str) -> str:
+    """== re.sub(r"([.!?])([A-Za-z])", r"\\1 \\2", text)."""
+    for probe, spaced in _STOP_THEN_LETTER:
+        text = probe.sub(spaced, text)
+    return text
+
+
 def reflow_soft_breaks(text: str, counters: dict) -> str:
-    text = text.replace("\r\n", "\n")
+    if "\r" in text:
+        text = text.replace("\r\n", "\n")
     text = _collapse_blank_runs(text)
     text = text.replace("\n\n", _PARA_SENTINEL)
     text = _dehyphenate_wraps(text)
-    text = text.replace("­\n", "")
+    if "\xad" in text:
+        text = text.replace("\xad\n", "")
     singles = text.count("\n")
-    text = text.replace("\n", " ")
+    if singles:
+        text = text.replace("\n", " ")
     text = text.replace(_PARA_SENTINEL, "\n\n")
     text = _collapse_space_runs(text)
     text = _strip_space_before_punct(text)
-    text = _MISSING_SPACE_AFTER_STOP.sub(r"\1 \2", text)
+    text = _space_after_stop(text)
     counters["reflow"] = {"single_newlines_joined": singles}
     return text
 
@@ -391,21 +528,35 @@ def reflow_soft_breaks(text: str, counters: dict) -> str:
 # Pass 2.3 — dialogue paragraphing (reference Step2_formatting_v14.py:402-429)
 # --------------------------------------------------------------------------
 
-_QUOTE_THEN_QUOTE = re.compile(r'(")([^"]*?)(")\s+(")')
-_STOP_THEN_QUOTE = re.compile(r'([.!?])\s+(")')
-_QUOTE_THEN_NARRATION = re.compile(r'("([^"]*[.!?])")\s+([A-ZÀ-Ö])')
+# The reference patterns, reshaped for speed at identical matches:
+# * (")([^"]*?)(")\s+("): [^"] cannot cross a quote, so the lazy group and
+#   a possessive one both end at the next quote;
+# * ([.!?])\s+(") split per stop char: a match is stop, whitespace, quote,
+#   so matches of different stops are disjoint, and the replacement keeps
+#   the stop right before its "\n\n" — no split pattern can create or hide
+#   a match of another, and the three subs in turn equal the one;
+# * ("([^"]*[.!?])")\s+([A-ZÀ-Ö]): the closing quote can only be the next
+#   quote, so the group is everything up to it, ending in a stop.
+# A possessive \s++ is exact wherever the item after it never matches
+# whitespace.
+# Group 1 is the whitespace gap that becomes "\n\n" (see _break_at_gap).
+_QUOTE_THEN_QUOTE = re.compile(r'"[^"]*+"(\s++)"')
+_STOP_THEN_QUOTE = tuple(re.compile(re.escape(stop) + r'(\s++)"') for stop in ".!?")
+_QUOTE_THEN_NARRATION = re.compile(r'"[^"]*+(?<=[.!?])"(\s++)[A-ZÀ-Ö]')
 
 
 def break_dialogue_paragraphs(text: str, counters: dict) -> str:
-    text = text.replace("\r\n", "\n")
+    if "\r" in text:
+        text = text.replace("\r\n", "\n")
     text = _collapse_blank_runs(text)
     text = text.replace("\n\n", _PBRK_SENTINEL)
+    n_pairs = n_stop = n_narr = 0
     if '"' in text:  # all three patterns require a double quote
-        text, n_pairs = _QUOTE_THEN_QUOTE.subn(r'\1\2"\n\n"', text)
-        text, n_stop = _STOP_THEN_QUOTE.subn(r"\1\n\n\2", text)
-        text, n_narr = _QUOTE_THEN_NARRATION.subn(r"\1\n\n\3", text)
-    else:
-        n_pairs = n_stop = n_narr = 0
+        text, n_pairs = _break_at_gap(_QUOTE_THEN_QUOTE, text)
+        for probe in _STOP_THEN_QUOTE:
+            text, n = _break_at_gap(probe, text)
+            n_stop += n
+        text, n_narr = _break_at_gap(_QUOTE_THEN_NARRATION, text)
     text = text.replace(_PBRK_SENTINEL, "\n\n")
     text = _collapse_blank_runs(text)
     counters["dialogue_paragraphing"] = {
@@ -422,9 +573,29 @@ def break_dialogue_paragraphs(text: str, counters: dict) -> str:
 # --------------------------------------------------------------------------
 
 _SOFT_PARA = re.compile(r"\n\s*\n")
+# A "\n" with no "\n" beside it, or the first of three "\n" in one
+# whitespace run.  No match means every "\n" sits in an "\n\n" pair that
+# is alone in its whitespace run — exactly the text _SOFT_PARA maps onto
+# itself through the sentinel round trip with no single left to join.
+_LOOSE_NEWLINE = re.compile(r"\n(?:(?<!\n\n)(?!\n)|\s*\n\s*\n)")
 
 
 def merge_residual_newlines(text: str, counters: dict) -> str:
+    # Gate: after break_dialogue_paragraphs this pass changes no synthetic
+    # doc.  It is the identity when no step can fire: no "\r", no loose
+    # newline, no sentinel text of its own, no [ \t] run, no whitespace
+    # before [,.;:?!] and no stop glued to a letter.
+    if (
+        "\r" not in text
+        and "\t" not in text
+        and _PBRK_SENTINEL not in text
+        and not _LOOSE_NEWLINE.search(text)
+        and "  " not in text
+        and not _ws_before_punct(text)
+        and not any(probe.search(text) for probe, _ in _STOP_THEN_LETTER)
+    ):
+        counters["single_newlines_merge"] = {"singles_removed": 0}
+        return text
     text = text.replace("\r\n", "\n")
     text = _collapse_blank_runs(text)
     text = _SOFT_PARA.sub(_PBRK_SENTINEL, text)
@@ -433,7 +604,7 @@ def merge_residual_newlines(text: str, counters: dict) -> str:
     text = text.replace(_PBRK_SENTINEL, "\n\n")
     text = _collapse_space_runs(text)
     text = _strip_space_before_punct(text)
-    text = _MISSING_SPACE_AFTER_STOP.sub(r"\1 \2", text)
+    text = _space_after_stop(text)
     counters["single_newlines_merge"] = {"singles_removed": singles}
     return text
 
@@ -446,8 +617,15 @@ def merge_residual_newlines(text: str, counters: dict) -> str:
 _MID_SENTENCE_BREAK = re.compile(r'([^\.!\?;:)"\n])\s*\n\n\s*([a-zà-öø-ÿ])')
 
 
+# Every match has "\n\n", optional whitespace, then its lowercase group 2.
+_MID_SENTENCE_GATE = re.compile(r"\n\n\s*[a-zà-öø-ÿ]")
+
+
 def collapse_midsentence_breaks(text: str, counters: dict) -> str:
-    text, n = _collapse_midsentence(text)
+    if _MID_SENTENCE_GATE.search(text):
+        text, n = _collapse_midsentence(text)
+    else:
+        n = 0
     counters["mid_sentence_breaks_collapsed"] = n
     return text
 
@@ -456,7 +634,17 @@ def collapse_midsentence_breaks(text: str, counters: dict) -> str:
 # Pass 2.6 — lone quote line fixer (reference Step2_formatting_v14.py:455-478)
 # --------------------------------------------------------------------------
 
+# A line that strips to '"' between two other lines: in joined text, "\n",
+# line whitespace, '"', line whitespace, "\n".  Every rewrite of the pass
+# starts at such a line.
+_LONE_QUOTE_LINE = re.compile(r'\n[^\S\n]*"[^\S\n]*\n')
+
+
 def resolve_lone_quote_lines(text: str, counters: dict) -> str:
+    joined = _join_lines(text)  # what the pass returns when idle
+    if not _LONE_QUOTE_LINE.search(joined):
+        counters["lone_quote_lines"] = {"removed": 0, "appended_to_above": 0}
+        return _collapse_blank_runs(joined)
     lines = text.splitlines()
     removed = appended = 0
     i = 1
@@ -496,7 +684,29 @@ def resolve_lone_quote_lines(text: str, counters: dict) -> str:
 _STRAY_THEN_OPEN = re.compile(r'^\s*"\s+([“"])(.*)$')
 
 
+# Any line _STRAY_THEN_OPEN matches opens (after whitespace) with '"',
+# whitespace, then '“' or '"'.  Line whitespace is never "\n", so a quote
+# that closes one line and opens the next ('"\n\n"', every dialogue
+# paragraph) is no hit; quote pairs inside a line ('." "') are, and are
+# then dropped unless the first quote opens its line.
+_STRAY_THEN_OPEN_GATE = re.compile(r'"[^\S\n]+[“"]')
+
+
+def _opens_line(text: str, probe: re.Pattern) -> bool:
+    """Whether a match of ``probe`` starts a line of ``text`` (after
+    whitespace).  ``text`` must be in "\\n".join(splitlines()) form."""
+    for m in probe.finditer(text):
+        i = m.start()
+        head = text[text.rfind("\n", 0, i) + 1 : i]
+        if not head or head.isspace():
+            return True
+    return False
+
+
 def close_prev_and_drop_stray_quote(text: str, counters: dict) -> str:
+    joined = _join_lines(text)  # what the pass returns when idle
+    if not _opens_line(joined, _STRAY_THEN_OPEN_GATE):  # idle: no counter
+        return joined
     lines = text.splitlines()
     fixed = 0
 
@@ -530,7 +740,18 @@ def close_prev_and_drop_stray_quote(text: str, counters: dict) -> str:
 _STRAY_BEFORE_NARRATION = re.compile(r'^\s*(["“])\s+([A-ZÀ-ÖØ-Ý].*)$')
 
 
+# Any line _STRAY_BEFORE_NARRATION matches holds '"' or '“', line
+# whitespace (never "\n"), then a capital; one literal-led probe per quote.
+_STRAY_BEFORE_NARRATION_GATES = (
+    re.compile(r'"[^\S\n]+[A-ZÀ-ÖØ-Ý]'),
+    re.compile(r"“[^\S\n]+[A-ZÀ-ÖØ-Ý]"),
+)
+
+
 def hoist_stray_quote_to_prev_line(text: str, counters: dict) -> str:
+    if not any(gate.search(text) for gate in _STRAY_BEFORE_NARRATION_GATES):
+        counters["leading_stray_quote_before_narrative_moved"] = 0
+        return _join_lines(text)
     lines = text.splitlines()
     moved = 0
 
@@ -560,18 +781,24 @@ def hoist_stray_quote_to_prev_line(text: str, counters: dict) -> str:
 # (reference Step2_formatting_v14.py:226-250)
 # --------------------------------------------------------------------------
 
-_CLOSE_OPEN_PAIR = re.compile(r'(”|")(\s+)("|“)(?=[A-Za-zÀ-ÖØ-öø-ÿ“])')
+# The reference's (”|")(\s+)("|“)(?=[A-Za-zÀ-ÖØ-öø-ÿ“]) -> "\1\n\n\3",
+# split per lead quote.  The quote after the whitespace is followed by a
+# letter or '“', never by whitespace, so it cannot lead a match itself:
+# matches never chain or overlap, the "\n\n" put in place of the
+# whitespace creates none, and the literal-led subs in turn equal the one
+# alternation-led sub.
+_CLOSE_OPEN_PAIRS = tuple(
+    (lead, re.compile(lead + r'(\s++)["“](?=[A-Za-zÀ-ÖØ-öø-ÿ“])'))
+    for lead in ('"', "”")
+)
 
 
 def split_adjacent_quote_pairs(text: str, counters: dict) -> str:
     hits = 0
-
-    def para_break(m: re.Match) -> str:
-        nonlocal hits
-        hits += 1
-        return f"{m.group(1)}\n\n{m.group(3)}"
-
-    text = _CLOSE_OPEN_PAIR.sub(para_break, text)
+    for lead, pair in _CLOSE_OPEN_PAIRS:
+        if lead in text:
+            text, n = _break_at_gap(pair, text)
+            hits += n
     counters["adjacent_quotes_split"] = hits
     return text
 
@@ -584,8 +811,17 @@ def split_adjacent_quote_pairs(text: str, counters: dict) -> str:
 _SPACED_QUOTE_PAIR = re.compile(r'(”|")([  \t]+)("|“)')
 
 
+# _SPACED_QUOTE_PAIR on text without '”' and '“': both alternations reduce
+# to '"', so the pattern is literal-led.  (With curly quotes the quote that
+# ends one match may lead the next, so no split is exact there.)
+_SPACED_STRAIGHT_PAIR = re.compile(r'"[\xa0 \t]++"')
+
+
 def collapse_spaced_quote_pairs(text: str, counters: dict) -> str:
-    text, n = _SPACED_QUOTE_PAIR.subn(lambda m: m.group(3), text)
+    if "”" in text or "“" in text:
+        text, n = _SPACED_QUOTE_PAIR.subn(r"\3", text)
+    else:
+        text, n = _SPACED_STRAIGHT_PAIR.subn('"', text)
     if n:
         counters["double_quotes_with_space_collapsed"] = n
     else:
@@ -610,11 +846,17 @@ def straighten_doubled_singles(text: str, counters: dict) -> str:
 # Pass 2.12 — superscript strip (reference Step2_formatting_v14.py:55-59)
 # --------------------------------------------------------------------------
 
-_SUPERSCRIPTS = re.compile(r"[¹²³⁰-⁹]")
+# The chars of the reference's [¹²³⁰-⁹] class; deleting them one char
+# at a time (memchr probes, nearly always absent) equals the class sub.
+_SUPERSCRIPT_CHARS = "¹²³" + "".join(map(chr, range(0x2070, 0x207A)))
 
 
 def drop_superscripts(text: str, counters: dict) -> str:
-    text, n = _SUPERSCRIPTS.subn("", text)
+    n = 0
+    for ch in _SUPERSCRIPT_CHARS:
+        if ch in text:
+            n += text.count(ch)
+            text = text.replace(ch, "")
     counters["superscripts_removed"] = n
     return text
 
@@ -624,13 +866,19 @@ def drop_superscripts(text: str, counters: dict) -> str:
 # (reference Step2_formatting_v14.py:61-112)
 # --------------------------------------------------------------------------
 
-_HAS_DIGIT = re.compile(r"\d")
-_ORDINAL = re.compile(r"^\d{1,3}(st|nd|rd|th)$", re.IGNORECASE)
+# The reference applies three per-line patterns to each line in turn.  They
+# run here once each over the joined text instead: (?m) makes ^/$ the line
+# ends, and where a line's \s could start a match it is kept off "\n"
+# ((?!\n) guards); the trailing lookahead classes may keep \s because `$`
+# is tried first and wins at every line end.  Line order is kept within
+# each kind, so tallies and samples come out in the reference order.
 _STANDALONE_NUM = re.compile(
-    r'(^|[\s,;:—\-\)\(\[\]“”"\' ])(\d{1,3})(?=($|[\s,;:—\-\)\(\]\[“”"\'\.,!?]))'
+    r'(?m)(^|(?!\n)[\s,;:—\-\)\(\[\]“”"\'\xa0])(\d{1,3})'
+    r'(?=($|[\s,;:—\-\)\(\]\[“”"\'\.,!?]))'
 )
-_AFTER_PUNCT_NUM = re.compile(r"[,:;]\s?(\d{1,3})(?=($|[^\w]))")
-_GLUED_NUM = re.compile(r"(?<=[A-Za-zÀ-ÖØ-öø-ÿ]|\.)(\d{1,3})(?=($|[^\w]))")
+_AFTER_PUNCT_NUM = re.compile(r"(?m)[,:;](?:(?!\n)\s)?(\d{1,3})(?=($|[^\w]))")
+_GLUED_NUM = re.compile(r"(?m)(?<=[A-Za-zÀ-ÖØ-öø-ÿ]|\.)(\d{1,3})(?=($|[^\w]))")
+_DIGIT_RUN = re.compile(r"\d+")
 
 
 @functools.lru_cache(maxsize=8)
@@ -638,11 +886,79 @@ def _money_next_re(money_terms: frozenset[str]) -> re.Pattern:
     # One escape/sort/join + compile per distinct money-term SET, not one
     # per document: the alternation build over the terms is the real
     # per-call cost (re.compile itself caches Patterns), so key the cache
-    # on the set and do the whole build inside it.
+    # on the set and do the whole build inside it.  The reference searches
+    # ^\s*(?:terms)\b in the rest of the line; this pattern is matched at
+    # the match end with the line end as endpos, which is the same test.
     money_alt = "|".join(
         sorted(map(re.escape, money_terms), key=len, reverse=True)
     )
-    return re.compile(rf"^\s*(?:{money_alt})\b", re.IGNORECASE)
+    return re.compile(rf"\s*(?:{money_alt})\b", re.IGNORECASE)
+
+
+def _digit_runs(text: str) -> list[int]:
+    """Sorted start of every maximal run of \\d chars in ``text``."""
+    try:
+        text.encode("latin-1")
+    except UnicodeEncodeError:  # may hold non-ASCII decimal digits
+        return [m.start() for m in _DIGIT_RUN.finditer(text)]
+    # \d in Latin-1 is exactly 0-9, found at memchr speed.
+    hits = []
+    for digit in "0123456789":
+        i = text.find(digit)
+        while i != -1:
+            hits.append(i)
+            i = text.find(digit, i + 1)
+    hits.sort()
+    return [p for k, p in enumerate(hits) if not k or hits[k - 1] != p - 1]
+
+
+# Where a match holding the digit run at r can start (-1: nowhere).  Every
+# footnote match spans its lead chars plus exactly one WHOLE digit run of
+# 1-3 digits (the lookaheads admit no digit), so it is found by one anchored
+# attempt per run instead of a full-text scan from every position.
+def _standalone_at(text: str, r: int) -> int:
+    return r if r == 0 or text[r - 1] == "\n" else r - 1
+
+
+def _after_punct_at(text: str, r: int) -> int:
+    if r and text[r - 1] in ",:;":
+        return r - 1
+    if r > 1 and text[r - 2] in ",:;":
+        return r - 2
+    return -1
+
+
+def _glued_at(text: str, r: int) -> int:
+    return r
+
+
+def _sub_digit_runs(pattern, at, text: str, runs: list[int], repl):
+    """== (pattern.sub(repl, text), digit runs of the result) for the
+    footnote patterns above.  A run outside every match shifts with the
+    text; a matched run survives only where ``repl`` returns the match text
+    as its prefix (the money guard) — otherwise repl returns no digit, so
+    no run is created or merged."""
+    out = []
+    kept = []
+    pos = 0
+    shift = 0
+    for r in runs:
+        s = at(text, r)
+        m = pattern.match(text, s) if s >= pos else None
+        if m is None:
+            kept.append(r + shift)
+            continue
+        rep = repl(m)
+        if rep.startswith(m.group()):
+            kept.append(r + shift)
+        out.append(text[pos:s])
+        out.append(rep)
+        shift += len(rep) - (m.end() - s)
+        pos = m.end()
+    if not out:
+        return text, runs
+    out.append(text[pos:])
+    return "".join(out), kept
 
 
 def strip_footnote_digits(
@@ -657,58 +973,53 @@ def strip_footnote_digits(
         else frozenset(money_terms)
     )
 
-    lines = text.splitlines()
-    for idx, line in enumerate(lines):
-        # Fast path (byte-safe): every pattern below requires a digit.
-        if not _HAS_DIGIT.search(line):
-            continue
+    def money_follows(m: re.Match) -> bool:
+        line_end = m.string.find("\n", m.end())
+        return money_next.match(
+            m.string, m.end(), line_end if line_end != -1 else len(m.string)
+        ) is not None
 
-        def on_standalone(m: re.Match) -> str:
-            num = m.group(2)
-            trail = m.group(3) or ""
-            if _ORDINAL.match(num):
-                return m.group(1) + num + trail
-            if money_next.search(line[m.end():]):
-                return m.group(1) + num + trail
-            tallies["standalone"] += 1
-            if len(samples["standalone"]) < 10:
-                samples["standalone"].append(
-                    line[max(0, m.start() - 40) : m.end() + 40].replace("\n", "⏎")
-                )
-            return m.group(1) + trail
+    def note(kind: str, m: re.Match) -> None:
+        tallies[kind] += 1
+        if len(samples[kind]) < 10:  # +-40 chars of context, inside the line
+            t = m.string
+            start, end = m.span()
+            head = t.rfind("\n", 0, start) + 1
+            tail = t.find("\n", end)
+            tail = len(t) if tail == -1 else tail
+            samples[kind].append(t[max(head, start - 40) : min(tail, end + 40)])
 
-        line = _STANDALONE_NUM.sub(on_standalone, line)
+    # The reference also spares an ordinal ("2nd") here, but tests only the
+    # digit group, which never holds the suffix: that guard never fires.
+    def on_standalone(m: re.Match) -> str:
+        trail = m.group(3) or ""
+        if money_follows(m):
+            return m.group(0) + trail
+        note("standalone", m)
+        return m.group(1) + trail
 
-        def on_after_punct(m: re.Match) -> str:
-            num = m.group(1)
-            if money_next.search(line[m.end():]):
-                return m.group(0)
-            tallies["after_punct"] += 1
-            if len(samples["after_punct"]) < 10:
-                samples["after_punct"].append(
-                    line[max(0, m.start() - 40) : m.end() + 40].replace("\n", "⏎")
-                )
-            return m.group(0).replace(num, "")
+    def on_after_punct(m: re.Match) -> str:
+        if money_follows(m):
+            return m.group(0)
+        note("after_punct", m)
+        return m.group(0).replace(m.group(1), "")
 
-        line = _AFTER_PUNCT_NUM.sub(on_after_punct, line)
+    def on_glued(m: re.Match) -> str:
+        note("glued_to_word", m)
+        return ""
 
-        def on_glued(m: re.Match) -> str:
-            num = m.group(1)
-            tallies["glued_to_word"] += 1
-            if len(samples["glued_to_word"]) < 10:
-                samples["glued_to_word"].append(
-                    line[max(0, m.start() - 40) : m.end() + 40].replace("\n", "⏎")
-                )
-            return m.group(0).replace(num, "")
-
-        line = _GLUED_NUM.sub(on_glued, line)
-        lines[idx] = line
+    text = _join_lines(text)
+    runs = _digit_runs(text)
+    if runs:
+        text, runs = _sub_digit_runs(_STANDALONE_NUM, _standalone_at, text, runs, on_standalone)
+        text, runs = _sub_digit_runs(_AFTER_PUNCT_NUM, _after_punct_at, text, runs, on_after_punct)
+        text, runs = _sub_digit_runs(_GLUED_NUM, _glued_at, text, runs, on_glued)
 
     counters["footnote_numbers_removed"] = tallies
     for key, vals in samples.items():
         if vals:
             counters[f"footnote_examples_{key}"] = vals
-    return "\n".join(lines)
+    return text
 
 
 # --------------------------------------------------------------------------
@@ -725,7 +1036,25 @@ _STOP_APOS_EOL_SUB = re.compile(r"([\.!\?])\'\s*$")
 _LINE_START_QUOTE_APOS_WS = re.compile(r'^\s*" ?(?:\'|’)\s*')
 
 
+# Every pattern above holds an apostrophe (' or ’) right after a stop,
+# right after '"' or '" ', or followed by optional whitespace and '"'.
+# One literal-led probe per apostrophe char covers all of them.
+_APOSTROPHE_ARTIFACT_GATES = tuple(
+    (apos, re.compile(apos + r'(?:(?<=[.!?"]' + apos + r')|(?<=" ' + apos + r')|\s*")'))
+    for apos in ("'", "’")
+)
+
+
 def mend_quote_apostrophe_artifacts(text: str, counters: dict) -> str:
+    if not any(
+        apos in text and gate.search(text)
+        for apos, gate in _APOSTROPHE_ARTIFACT_GATES
+    ):
+        counters["quote_artifacts_inline_moves"] = 0
+        counters["quote_artifacts_moved_up"] = 0
+        counters["quote_artifacts_moved_down"] = 0
+        counters["quote_artifacts_collapsed"] = 0
+        return _join_lines(text)
     lines = text.splitlines()
     moved_up = moved_down = collapsed = inline = 0
 
@@ -808,9 +1137,17 @@ def normalize_comma_quote_gap(text: str, counters: dict) -> str:
 # --------------------------------------------------------------------------
 
 _LONE_QUOTE_FORMS = {'"', '""', "“", "”"}
+# The middle line of an island strips to a _LONE_QUOTE_FORMS member and
+# sits between two other lines: in joined text, "\n", line whitespace, the
+# form, line whitespace, "\n".
+_QUOTE_ISLAND_LINE = re.compile(r'\n[^\S\n]*(?:""?|“|”)[^\S\n]*\n')
 
 
 def drop_quote_islands(text: str, counters: dict) -> str:
+    joined = _join_lines(text)  # what the pass returns when idle
+    if not _QUOTE_ISLAND_LINE.search(joined):
+        counters["quote_island_blocks_removed"] = 0
+        return joined
     lines = text.splitlines()
     out: list[str] = []
     i = 0
@@ -839,18 +1176,22 @@ def drop_quote_islands(text: str, counters: dict) -> str:
 # Pass 2.17 — new-speaker split (reference Step2_formatting_v14.py:483-501)
 # --------------------------------------------------------------------------
 
-_SPEAKER_TURN = re.compile(r'([.!?]")\s+(")([A-Z])')
+# The reference's ([.!?]")\s+(")([A-Z]) -> "\1\n\n\2\3", split per stop
+# char: a match runs stop, quote, whitespace, quote, capital, so matches of
+# different stops are disjoint, and the "\n\n" put in place of the
+# whitespace keeps the same stop before it — the three literal-led subs in
+# turn equal the one class-led sub.
+_SPEAKER_TURNS = tuple(
+    re.compile(re.escape(stop) + r'"(\s++)"[A-Z]') for stop in ".!?"
+)
 
 
 def split_speaker_turns(text: str, counters: dict) -> str:
     hits = 0
-
-    def para_break(m: re.Match) -> str:
-        nonlocal hits
-        hits += 1
-        return m.group(1) + "\n\n" + m.group(2) + m.group(3)
-
-    text = _SPEAKER_TURN.sub(para_break, text)
+    if '"' in text:
+        for turn in _SPEAKER_TURNS:
+            text, n = _break_at_gap(turn, text)
+            hits += n
     counters.setdefault("dialogue_splits_new_speaker", 0)
     counters["dialogue_splits_new_speaker"] += hits
     return text
@@ -860,21 +1201,40 @@ def split_speaker_turns(text: str, counters: dict) -> str:
 # Pass 2.18 — intraline whitespace (reference Step2_formatting_v14.py:114-124)
 # --------------------------------------------------------------------------
 
-_INNER_SPACE_RUN = re.compile(r"(?<=\S) {2,}(?=\S)")
+
+def _collapse_inner_space_runs(text: str) -> tuple[str, int]:
+    r"""== re.subn(r"(?<=\S) {2,}(?=\S)", " ", line) on every line of joined
+    text: a run of 2+ spaces between two non-whitespace chars becomes one
+    space.  A run at a line edge touches "\n" or a text edge, so it is
+    kept, as the per-line lookarounds keep it."""
+    i = text.find("  ")
+    if i == -1:
+        return text, 0
+    out = []
+    pos = 0
+    n = len(text)
+    runs = 0
+    while i != -1:
+        j = i + 2
+        while j < n and text[j] == " ":
+            j += 1
+        if i and j < n and not _is_ws(text[i - 1]) and not _is_ws(text[j]):
+            out.append(text[pos:i])
+            out.append(" ")
+            pos = j
+            runs += 1
+        i = text.find("  ", j)
+    out.append(text[pos:])
+    return "".join(out), runs
 
 
 def tidy_intraline_spaces(text: str, counters: dict) -> str:
-    total = 0
-    out = []
-    for line in text.splitlines():
-        if "\t" in line:
-            line = line.replace("\t", " ")
-        if "  " in line:  # pattern requires a 2-space run
-            line, n = _INNER_SPACE_RUN.subn(" ", line)
-            total += n
-        out.append(line)
+    text = _join_lines(text)
+    if "\t" in text:
+        text = text.replace("\t", " ")
+    text, total = _collapse_inner_space_runs(text)
     counters["intraline_space_runs_normalized"] = total
-    return "\n".join(out)
+    return text
 
 
 # --------------------------------------------------------------------------

@@ -29,14 +29,15 @@ def _flatten_counters(prefix: str, log: dict, out: dict[str, int]) -> None:
     """Flatten nested reference-style log dicts into int-only counters
     (example lists are dropped — they go to a samples column, not metrics)."""
     for key, value in log.items():
-        name = f"{prefix}.{key}"
-        if isinstance(value, bool):
-            out[name] = int(value)
-        elif isinstance(value, int):
-            out[name] = value
-        elif isinstance(value, dict):
-            _flatten_counters(name, value, out)
-        # strings / lists (examples) are intentionally skipped
+        if type(value) is not int:  # nearly every value is a plain int
+            if isinstance(value, dict):
+                _flatten_counters(f"{prefix}.{key}", value, out)
+                continue
+            if not isinstance(value, int):
+                continue  # strings / lists (examples) are intentionally skipped
+            if isinstance(value, bool):
+                value = int(value)
+        out[f"{prefix}.{key}"] = value
 
 
 def transform_text(

@@ -21,7 +21,14 @@ from __future__ import annotations
 import re
 
 ROMAN = r"[IVXLCDM]+"
-CHAPTER_HEADING = re.compile(rf"(?m)^(CHAPTER)\s+({ROMAN})\b")
+# The reference patterns anchor on a line start ((?m)^ / (?<!^)(?<!\n)),
+# which makes re try every position of the text.  Here they lead with the
+# literal "CHAPTER" (found at memchr speed) and test the line start right
+# after it: (?<![^\n]CHAPTER) holds exactly where (?m)^ holds before it —
+# at the text start or after "\n" — and (?<=[^\n]CHAPTER) exactly where
+# it does not.
+_AT_LINE_START = r"(?<![^\n]CHAPTER)"
+CHAPTER_HEADING = re.compile(rf"(CHAPTER){_AT_LINE_START}\s+({ROMAN})\b")
 HR_MARK = "---"
 PAGE_BREAK_CHAR = "\f"
 ALLCAPS_TOKEN = re.compile(r"\b[A-Z]{2,}\b")
@@ -30,8 +37,10 @@ _A2_WINDOW = 60
 _A2_MARGIN = 10
 _LONE_I_OR_A = re.compile(r"\b[IA]\b")
 
-_INLINE_CHAPTER = re.compile(r"(?m)(?<!^)(?<!\n)(CHAPTER\s+(?:[IVXLCDM]+)\b)")
-_CHAPTER_LINE_TAIL = re.compile(r"(?m)^(CHAPTER\s+[IVXLCDM]+)\b[ \t]*(.*)$")
+_INLINE_CHAPTER = re.compile(r"CHAPTER(?<=[^\n]CHAPTER)\s+[IVXLCDM]+\b")
+_CHAPTER_LINE_TAIL = re.compile(
+    rf"(?m)(CHAPTER{_AT_LINE_START}\s+[IVXLCDM]+)\b[ \t]*(.*)$"
+)
 _PURE_ROMAN = re.compile(r"[IVXLCDM]+")
 
 
@@ -52,7 +61,7 @@ def promote_inline_chapter_markers(text: str, counters: dict) -> str:
         counters["inline_chapter_promoted"] = 0
         counters["newline_after_roman_normalized"] = 0
         return text
-    text, promoted = _INLINE_CHAPTER.subn(r"\n\n\1", text)
+    text, promoted = _INLINE_CHAPTER.subn(r"\n\n\g<0>", text)
 
     def two_newlines_after(m: re.Match) -> str:
         head = m.group(1)

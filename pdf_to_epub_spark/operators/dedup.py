@@ -1123,14 +1123,14 @@ def containment_pairs(
     # optimizer's back door (measured 26× on 6 KB docs; the null filter
     # references only the generator output, so nothing pushes down).
     if max_df is None:
-        probe = hashed.select(
+        prefix_side = hashed.select(
             "id",
             F.explode_outer(F.slice("hs", F.lit(1), prefix_len)).alias("h"),
         ).where(F.col("h").isNotNull())
         index = hashed.select("id", F.explode_outer("hs").alias("h")).where(
             F.col("h").isNotNull()
         )
-        probe = probe.hint("shuffle_hash")
+        prefix_side = prefix_side.hint("shuffle_hash")
     else:
         # Hot shingles must leave BOTH sides BEFORE the probe prefix is
         # sliced: filtering only the index is unsound — a doc whose
@@ -1147,14 +1147,14 @@ def containment_pairs(
         index = filt.select(
             "id", F.explode_outer("hs_f").alias("h")
         ).where(F.col("h").isNotNull())
-        probe = filt.select(
+        prefix_side = filt.select(
             "id",
             F.explode_outer(
                 F.slice("hs_f", F.lit(1), _hot_adjusted_prefix_len(threshold))
             ).alias("h"),
         ).where(F.col("h").isNotNull())
-        probe = probe.hint("shuffle_hash")
-    # shuffle_hash (build = probe, the smaller side): the optimizer's
+        prefix_side = prefix_side.hint("shuffle_hash")
+    # shuffle_hash (build = prefix_side, the smaller side): the optimizer's
     # default here is to BROADCAST the full index explode — a 6.2M-entry
     # single-threaded hash-relation build at sf0.1 (~3.2 s of the
     # operator's wall; measured A/B 3.2 s vs 1.4 s warm) and a
@@ -1162,7 +1162,7 @@ def containment_pairs(
     # Both sides exchange slim (id, long) rows; the per-partition build
     # is bounded by the probe's prefix volume and AQE skew-split still
     # applies.
-    p, ix = probe.alias("p"), index.alias("ix")
+    p, ix = prefix_side.alias("p"), index.alias("ix")
     pairs = (
         p.join(
             ix,

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .resume import doc_hash_column, resume_payload_col
+
 if TYPE_CHECKING:
     import pandas as pd
 
@@ -182,11 +184,9 @@ def extract_documents(
     ``bucket(N, url)`` layout and skip this); ``None`` keeps scan
     partitioning (no shuffle).
     """
+    payload = resume_payload_col(docs.columns, text_col)
     cols = [F.col("url"), F.col("warc_ts"), F.col("lang")]
-    if "html" in docs.columns:
-        cols.append(F.sha2(F.col("html"), 256).alias("doc_hash"))
-    else:
-        cols.append(F.sha2(F.encode(F.col(text_col), "UTF-8"), 256).alias("doc_hash"))
+    cols.append(doc_hash_column(docs, payload).alias("doc_hash"))
     cols.append(F.col(text_col).alias("text"))
     narrowed = docs.select(*cols)
 

@@ -13,16 +13,31 @@ is broadcast — no shuffle of the 100 TB side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Iterable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def resume_payload_col(columns: Iterable[str], text_col: str = "text") -> str:
+    """The column whose bytes identify a document for resume: the raw page
+    (``html``) whenever the input carries one, else the text column.  This
+    is the ``doc_hash`` that `extract_documents` records, so a resume index
+    built from its output must be matched on the same column."""
+    return "html" if "html" in columns else text_col
+
+
+def doc_hash_column(docs: DataFrame, payload_col: str) -> Column:
+    """SHA-256 of ``payload_col`` (string columns as UTF-8), JVM-side."""
+    col = F.col(payload_col)
+    if dict(docs.dtypes).get(payload_col) == "string":
+        col = F.encode(col, "UTF-8")
+    return F.sha2(col, 256)
 
 
 def with_doc_hash(docs: DataFrame, payload_col: str = "html") -> DataFrame:
     """SHA-256 content identity, computed JVM-side."""
-    col = F.col(payload_col)
-    if dict(docs.dtypes).get(payload_col) == "string":
-        col = F.encode(col, "UTF-8")
-    return docs.withColumn("doc_hash", F.sha2(col, 256))
+    return docs.withColumn("doc_hash", doc_hash_column(docs, payload_col))
 
 
 def pending_documents(

@@ -111,15 +111,22 @@ def ingest(
         )
 
     if done_hashes is not None:
-        from pdf_to_epub_spark.operators import pending_documents, with_doc_hash
-
-        # hash the column that actually carries the payload: in html/pdf
-        # mode ``text`` is null, so hashing it would make every doc_hash
-        # null and the resume anti-join a silent no-op (100% re-extraction)
-        payload = "html" if (html_mode or pdf_mode) else "text"
-        pages = pending_documents(
-            with_doc_hash(pages, payload_col=payload), done_hashes
+        from pdf_to_epub_spark.operators import (
+            pending_documents,
+            resume_payload_col,
+            with_doc_hash,
         )
+
+        # The identity extract_documents records: the raw page whenever the
+        # pages carry one (in html/pdf mode ``text`` is null, so a text hash
+        # would be null and the anti-join a silent no-op), else the text.
+        payload = resume_payload_col(pages.columns)
+        pages = pending_documents(with_doc_hash(pages, payload), done_hashes)
+        if payload != "text" and not (html_mode or pdf_mode):
+            # OCR mode extracts ``text``, so a done set keyed on text
+            # hashes (with_doc_hash(payload_col="text")) names the same
+            # documents: skip those too.
+            pages = pending_documents(with_doc_hash(pages, "text"), done_hashes)
 
     if html_mode and pdf_mode:
         raise ValueError("pick one of html_mode / pdf_mode")

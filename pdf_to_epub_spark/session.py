@@ -13,6 +13,33 @@ import os
 from pyspark.sql import SparkSession
 
 
+# 8g GC-thrashes the 32-thread text workloads (quality_filters measured
+# 16.7 s at 8g vs 13.2 s at 32g cold on a 32-core, 128 GiB host), so local
+# mode asks for 24g where the host has room for it.
+DRIVER_MEMORY_GB = 24
+# Share of the host's MemTotal the driver heap may take: the JVM grows its
+# heap lazily up to -Xmx, so a 24g default on a 15 GiB host gets the whole
+# test JVM killed by the kernel's OOM killer well before Java would raise.
+DRIVER_MEMORY_SHARE = 0.5
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` default: DRIVER_MEMORY_GB, capped at
+    DRIVER_MEMORY_SHARE of the host's MemTotal (read from ``meminfo``;
+    uncapped when that file is missing or unreadable)."""
+    try:
+        with open(meminfo, encoding="ascii") as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{DRIVER_MEMORY_GB}g"
+    cap_mb = int(total_kb * DRIVER_MEMORY_SHARE) // 1024
+    if cap_mb >= DRIVER_MEMORY_GB * 1024:
+        return f"{DRIVER_MEMORY_GB}g"
+    return f"{max(cap_mb, 1024)}m"
+
+
 def get_spark(
     app_name: str = "pdf_to_epub_spark",
     master: str | None = None,
@@ -45,12 +72,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        # 24g on this 128 GiB box: 8g GC-thrashes the 32-thread text
-        # workloads (quality_filters measured 16.7 s at 8g vs 13.2 s at
-        # 32g cold); on a real cluster executor memory is set per-node in
-        # spark-submit (DEPLOYMENT.md)
+        # SPARK_GRAFT_DRIVER_MEM wins; see default_driver_memory otherwise.
+        # On a real cluster executor memory is set per node in
+        # spark-submit (DEPLOYMENT.md).
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
     )

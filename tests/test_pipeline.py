@@ -89,6 +89,22 @@ def test_ingest_resume_skips_done(spark):
     assert result.corpus.count() == 6
 
 
+def test_ingest_resume_skips_extracted_repeats(spark):
+    """A resume index committed from extract_documents output (doc_hash
+    over ``html`` whenever the pages carry it) must skip every repeat in an
+    OCR-mode ingest of pages that carry both ``html`` and ``text``."""
+    from pdf_to_epub_spark.operators import extract_documents
+
+    rows = make_documents(10, seed=23)
+    pages = _pages(spark, rows)
+    repeats = sorted(r["url"] for r in rows[:4])
+    committed = extract_documents(pages.where(F.col("url").isin(repeats)))
+    done = committed.select("doc_hash")
+    result = ingest(pages, done_hashes=done, min_words=1)
+    kept = sorted(r["url"] for r in result.corpus.select("url").collect())
+    assert kept == sorted(r["url"] for r in rows[4:])
+
+
 def test_ingest_tail_quota_lm_gate_and_packing(spark):
     """Tail stages: per-domain quota, LM perplexity gate, per-split packed
     contexts — composed behind the oracled per-stage operators."""
