@@ -186,7 +186,7 @@ def extract_documents(
     """
     payload = resume_payload_col(docs.columns, text_col)
     cols = [F.col("url"), F.col("warc_ts"), F.col("lang")]
-    cols.append(doc_hash_column(docs, payload).alias("doc_hash"))
+    cols.append(doc_hash_column(payload).alias("doc_hash"))
     cols.append(F.col(text_col).alias("text"))
     narrowed = docs.select(*cols)
 

@@ -27,17 +27,17 @@ def resume_payload_col(columns: Iterable[str], text_col: str = "text") -> str:
     return "html" if "html" in columns else text_col
 
 
-def doc_hash_column(docs: DataFrame, payload_col: str) -> Column:
-    """SHA-256 of ``payload_col`` (string columns as UTF-8), JVM-side."""
-    col = F.col(payload_col)
-    if dict(docs.dtypes).get(payload_col) == "string":
-        col = F.encode(col, "UTF-8")
-    return F.sha2(col, 256)
+def doc_hash_column(payload_col: str) -> Column:
+    """SHA-256 of ``payload_col``'s bytes, JVM-side.  A string column is
+    hashed as the bytes it stores (a binary cast, not a decode/encode that
+    would rewrite malformed UTF-8), so a payload hashes the same as string
+    or as binary."""
+    return F.sha2(F.col(payload_col).cast("binary"), 256)
 
 
 def with_doc_hash(docs: DataFrame, payload_col: str = "html") -> DataFrame:
     """SHA-256 content identity, computed JVM-side."""
-    return docs.withColumn("doc_hash", doc_hash_column(docs, payload_col))
+    return docs.withColumn("doc_hash", doc_hash_column(payload_col))
 
 
 def pending_documents(

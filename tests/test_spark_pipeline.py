@@ -97,6 +97,25 @@ def test_resume_anti_join(spark, docs_df):
     assert pending_documents(hashed, hashed.select("doc_hash")).count() == 0
 
 
+def test_doc_hash_is_sha256_of_stored_bytes(spark):
+    """A string payload hashes as its UTF-8 bytes, the same as the binary
+    form of the payload, so hashes recorded over either column agree."""
+    import hashlib
+
+    from pdf_to_epub_spark.operators import doc_hash_column
+
+    texts = ["plain ascii", "“curly” — café\u00a0naïve", ""]
+    df = spark.createDataFrame(
+        [(t, t.encode("utf-8")) for t in texts], "s string, b binary"
+    )
+    got = df.select(
+        doc_hash_column("s").alias("hs"), doc_hash_column("b").alias("hb")
+    ).collect()
+    want = [hashlib.sha256(t.encode("utf-8")).hexdigest() for t in texts]
+    assert [r["hs"] for r in got] == want
+    assert [r["hb"] for r in got] == want
+
+
 def test_metrics_tables(extracted):
     m = partition_metrics(extracted, run_id="t", stage="extract")
     rows = m.collect()
