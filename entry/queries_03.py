@@ -838,7 +838,7 @@ def _q_ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.90 on this uniform-random corpus — ANN's worst case; the candidate
     union covers ~53% of it, the recall/scan-fraction trade the table
     count controls.  Audited against the brute-force oracle by
-    tests/test_training_ops.py and reported in bench.py)."""
+    tests/test_training_ops.py)."""
     from pdf_to_epub_spark.operators import lsh_topk
 
     e = _t(spark, sf_dir, "embeddings").select(

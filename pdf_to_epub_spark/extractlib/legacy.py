@@ -9,8 +9,7 @@ inventories separately from the v11 main path:
 * legacy T17 — general footnote-number removal with
   year (1500-2099) and currency guards                  (reference :215-299)
 
-Semantics preserved pass-for-pass; used via the same pandas-UDF plumbing as
-the main path (see functions/udfs.py).
+Semantics preserved pass-for-pass.
 """
 
 from __future__ import annotations

@@ -1,3 +1,3 @@
-from .udfs import decode_html_udf, rtf_to_text_udf
+from .udfs import decode_html_udf
 
-__all__ = ["decode_html_udf", "rtf_to_text_udf"]
+__all__ = ["decode_html_udf"]

@@ -14,11 +14,3 @@ def decode_html_udf(html: pd.Series) -> pd.Series:
     from pdf_to_epub_spark.sources.synth import decode_html
 
     return html.map(lambda b: decode_html(b) if b is not None else "")
-
-
-@pandas_udf(StringType())
-def rtf_to_text_udf(raw: pd.Series) -> pd.Series:
-    """RTF binary → text (reference legacy Step1_ocr_cleanup_v7.py:89-104)."""
-    from pdf_to_epub_spark.extractlib.legacy import rtf_to_text
-
-    return raw.map(lambda b: rtf_to_text(b) if b is not None else "")

@@ -188,25 +188,6 @@ def _seeded(i: int):
     return lambda h: F.xxhash64(h, F.lit(i))
 
 
-def minhash_signature(shingles_col: Column, num_hashes: int = 64) -> Column:
-    """Array of ``num_hashes`` min-hash values.  The shingle string is
-    hashed to a long ONCE (xxhash64); per-seed hashes are then derived from
-    that long (xxhash64(h, seed)), which keeps the per-seed pass integer-only
-    — ~an order of magnitude cheaper than num_hashes string hashings.
-
-    ``shingles_col`` should be a MATERIALIZED column reference (it is
-    referenced ``num_hashes`` times as the transform collection; a heavy
-    embedded expression tree would re-evaluate per seed — prefer
-    :func:`minhash_signatures`, which materializes the hash array once)."""
-    base = F.transform(shingles_col, lambda s: F.xxhash64(s))
-    return F.array(
-        *[
-            F.array_min(F.transform(base, lambda h: F.xxhash64(h, F.lit(i))))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -217,7 +198,7 @@ def minhash_signatures(
     """Slim per-doc signature table ``(id, sig: array<long>)`` — the
     artifact a 100 TB pipeline writes ONCE per corpus and reuses across
     banding configurations (the signature build dominates the operator's
-    cost; see bench.py's amortized mode).
+    cost).
 
     Shingle identity is the rotation-XOR combine of per-token hashes
     (:func:`_shingle_hash_array` — the `containment_pairs` scheme): no

@@ -11,8 +11,9 @@ Spark-first design notes (what holds at 100 TB / 1000 executors):
 * **Arrow-batched, no per-row Python at the API layer.**  One Python worker
   per core receives column batches; regexes are compiled once per worker at
   import time (extractlib module constants).
-* **doc_hash computed JVM-side** (``sha2(html, 256)``) so the binary column
-  never crosses into Python unless the caller asks for binary decode.
+* **doc_hash computed JVM-side** (``resume.doc_hash_column``) so the
+  binary column never crosses into Python unless the caller asks for
+  binary decode.
 * **Error isolation**: a failing/oversized doc becomes a quarantine row
   (status column), mirroring the reference's per-shard ``continue``
   (`/root/reference/ocr-processing/merge_one_book.py:78-80`).
@@ -214,7 +215,7 @@ def _binary_mode_extract(
         F.col("url"),
         F.col("warc_ts"),
         F.col("lang"),
-        F.sha2(F.col(payload_col), 256).alias("doc_hash"),
+        doc_hash_column(payload_col).alias("doc_hash"),
         F.col(payload_col).alias("html"),
     )
     if salt_partitions:

@@ -2,12 +2,9 @@
 
 Distributed re-expression of the reference's per-pass JSON logs
 (`/root/reference/text-processing/Step1_ocr_cleanup_v11.py:210-219`,
-`Step2_formatting_v14.py:551-553`): each extraction task contributes one
-row per (partition, counter) which is rolled up into a
-``map<string,long>`` per partition — the FIXTURES.md §6 schema.
-
-All JVM-side: ``spark_partition_id`` → explode the counters map →
-partial (map-side) sum → re-assemble a map.  One shuffle, combiner-enabled.
+`Step2_formatting_v14.py:551-553`): the per-document counters of each
+input partition are summed into one ``map<string,long>`` per partition —
+the FIXTURES.md §6 schema.  All JVM-side, one aggregation.
 """
 
 from __future__ import annotations
@@ -19,44 +16,34 @@ from pyspark.sql import functions as F
 def partition_metrics(extracted: DataFrame, run_id: str, stage: str) -> DataFrame:
     """extracted (with ``counters: map<string,long>``) → one row per input
     partition: (run_id, stage, partition_id, url_count, counters,
-    committed_at)."""
-    # Lazy localCheckpoint: the slim (partition_id, url, counters) projection
-    # feeds TWO aggregations (url_count + per-key rollup); without the
-    # barrier each branch re-executes the full upstream plan — for
-    # extract_documents input that re-runs the whole Python extraction stage
-    # (~2× metrics-job cost).  partition_id is computed BEFORE the barrier,
-    # so it reflects the input partitioning; freed by the ContextCleaner.
-    base = extracted.select(
-        F.spark_partition_id().alias("partition_id"),
-        F.col("url"),
-        F.col("counters"),
-    ).localCheckpoint(eager=False)
-    # url_count computed over ALL rows of the partition, independently of
-    # counter keys — a max over per-counter distinct counts undercounts
-    # partitions whose docs share no common counter key (e.g. ok docs with
-    # stage counters mixed with error docs carrying empty maps).
-    url_counts = base.groupBy("partition_id").agg(
-        F.countDistinct("url").alias("url_count")
+    committed_at).
+
+    One ``groupBy(partition_id)`` with a single shuffle: ``url_count`` is
+    the size of the partition's url set (a ``countDistinct`` would plan a
+    second exchange on (partition_id, url)), ``counters`` a
+    ``map_zip_with`` fold of the partition's collected maps (per-key
+    sums).  A document with an empty or null map contributes
+    ``{"_none": 0}``, so every partition has a non-empty map.  The
+    upstream plan runs once per action; no checkpoint or join.  The
+    aggregate holds one map and one url per document of a partition in
+    memory, so a partition must fit those in one task."""
+    counters = F.col("counters")
+    per_doc = F.when(F.coalesce(F.size(counters), F.lit(0)) > 0, counters).otherwise(
+        F.create_map(F.lit("_none"), F.lit(0).cast("long"))
     )
-    per_key = (
-        base.select(
-            "partition_id", F.explode_outer("counters").alias("counter", "value")
-        )
-        .groupBy("partition_id", "counter")
-        .agg(F.sum("value").alias("total"))
-    )
-    rolled = per_key.groupBy("partition_id").agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    F.coalesce(F.col("counter"), F.lit("_none")).alias("k"),
-                    F.coalesce(F.col("total"), F.lit(0)).alias("v"),
-                )
-            )
-        ).alias("counters"),
+    summed = F.aggregate(
+        F.collect_list(per_doc),
+        F.create_map().cast("map<string,bigint>"),
+        lambda acc, m: F.map_zip_with(
+            acc, m, lambda _k, a, b: F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0))
+        ),
     )
     return (
-        url_counts.join(rolled, "partition_id")
+        extracted.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(
+            F.size(F.collect_set("url")).cast("long").alias("url_count"),
+            summed.alias("counters"),
+        )
         .select(
             F.lit(run_id).alias("run_id"),
             F.lit(stage).alias("stage"),

@@ -15,8 +15,12 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# read errors that mean "no snapshot yet": missing path, empty directory
+_NOTHING_COMMITTED = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
 
 
 def resume_payload_col(columns: Iterable[str], text_col: str = "text") -> str:
@@ -59,11 +63,16 @@ def resume_run(
     payload_col: str = "html",
 ) -> DataFrame:
     """Convenience wrapper: hash the input, anti-join against the committed
-    snapshot at ``committed_path`` (absent/empty snapshot → full input)."""
+    snapshot at ``committed_path``.  A missing path or an empty directory
+    means nothing is committed yet (→ full input); any other read error,
+    e.g. an unreadable part file, is raised rather than silently
+    recommitting every document."""
     spark = docs.sparkSession
     hashed = with_doc_hash(docs, payload_col)
     try:
         done = spark.read.parquet(committed_path).select("doc_hash")
-    except Exception:  # noqa: BLE001 — first run: nothing committed yet
+    except AnalysisException as exc:
+        if exc.getCondition() not in _NOTHING_COMMITTED:
+            raise
         return hashed
     return pending_documents(hashed, done)

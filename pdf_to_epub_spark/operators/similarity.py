@@ -381,7 +381,7 @@ def topk_recall(
 ) -> float:
     """recall@k of an approximate top-k result against the brute-force
     oracle: |approx ∩ exact| / (n_queries · k).  Makes the LSH/IVF paths
-    auditable — report alongside their latency (see bench.py)."""
+    auditable — report alongside their latency."""
     e = exact.where(F.col("rank") <= k).select(query_id_col, id_col)
     a = approx.where(F.col("rank") <= k).select(query_id_col, id_col)
     hits = e.join(a, [query_id_col, id_col], "left_semi").count()

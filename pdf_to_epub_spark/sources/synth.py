@@ -362,36 +362,3 @@ def expected_main_content(doc_id: int, text: str) -> str:
     """Ground-truth main content for :func:`make_boilerplate_page`."""
     lines = [ln for ln in text.split("\n") if _NONBLANK.search(ln)]
     return f"Document {doc_id}\n" + "".join(ln + "\n" for ln in lines)
-
-
-def write_boilerplate_parquet(
-    path: str, n: int, seed: int = 42, n_files: int = 1,
-    bucket_by_url: bool = False,
-) -> None:
-    """Materialize a corpus of full boilerplate PAGES (html =
-    make_boilerplate_page around each document's text) — the input for the
-    HTML-mode extraction benchmarks.  ``bucket_by_url`` as in
-    `write_parquet`: the Iceberg ``bucket(N, url)`` on-disk emulation."""
-    import pyarrow as pa
-
-    schema = pa.schema(
-        [
-            ("url", pa.string()),
-            ("warc_ts", pa.timestamp("us")),
-            ("html", pa.binary()),
-            ("lang", pa.string()),
-        ]
-    )
-    rows = []
-    for i, r in enumerate(make_documents(n, seed)):
-        rows.append(
-            {
-                "url": r["url"],
-                "warc_ts": r["warc_ts"],
-                "html": make_boilerplate_page(i, r["url"], r["text"]),
-                "lang": r["lang"],
-            }
-        )
-    _write_part_files(
-        rows, schema, path, n_files, bucket_by_url, "part-{:05d}.parquet"
-    )

@@ -6,11 +6,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TPCH_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
-    "events", "documents", "embeddings",
-)
-
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 
@@ -20,7 +15,3 @@ def sf_dir() -> str:
 
 def load_table(spark: SparkSession, name: str, base_dir: str | None = None) -> DataFrame:
     return spark.read.parquet(f"{base_dir or sf_dir()}/{name}.parquet")
-
-
-def load_all(spark: SparkSession, base_dir: str | None = None) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, base_dir) for t in TPCH_TABLES}

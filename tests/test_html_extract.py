@@ -140,6 +140,11 @@ def test_spark_operator_roundtrip(spark):
     ctr = extracted.select(F.explode("counters").alias("k", "v"))
     keys = {r["k"] for r in ctr.select("k").distinct().collect()}
     assert "html.dropped_tag_prior" in keys and "html.paragraphs" in keys
+    # doc_hash is the SHA-256 of the stored page bytes (the resume identity)
+    import hashlib
+
+    hashes = extracted.select("url", "doc_hash").collect()
+    assert dict(hashes) == {u: hashlib.sha256(h).hexdigest() for u, h, *_ in rows}
 
 
 def test_numwords_classifier_rule():

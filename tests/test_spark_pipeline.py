@@ -126,6 +126,82 @@ def test_metrics_tables(extracted):
     assert "step2.reflow.single_newlines_joined" in roll
 
 
+def test_partition_metrics_edge_partitions(spark):
+    """One aggregation per partition: an error-only partition reports
+    ``{"_none": 0}``; a partition mixing ok docs with empty-map (error)
+    docs keeps its real keys, adds ``_none`` and counts distinct urls; the
+    per-key sums over all partitions equal `corpus_counters`."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    texts = [r["text"] for r in make_documents(9, seed=7)]
+    rows = (
+        [(f"err://{i}", None) for i in range(3)]
+        + [(f"mix://{i}", texts[i]) for i in range(4)]
+        + [(f"mix://e{i}", None) for i in range(2)]
+        + [(f"ok://{i}", texts[4 + i]) for i in range(5)]
+        + [("ok://0", texts[4])]  # a second capture of one url
+    )
+    df = spark.createDataFrame(rows, "url string, text string").select(
+        "url", F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit("en").alias("lang"), "text",
+    )
+    group = F.regexp_extract("url", r"^(\w+)://", 1)
+    extracted = extract_documents(df).repartition(8, group).cache()
+    placed = extracted.select(
+        group.alias("g"), F.spark_partition_id().alias("pid")
+    ).distinct().collect()
+    assert len({r["g"] for r in placed}) == len({r["pid"] for r in placed}) == 3
+    pid = {r["g"]: r["pid"] for r in placed}
+
+    docs = extracted.select("url", "counters").collect()
+    by_group = {}
+    for r in docs:
+        by_group.setdefault(r["url"].split("://")[0], []).append(r)
+    want = {}
+    for g, rs in by_group.items():
+        total = Counter()
+        for r in rs:
+            total.update(r["counters"] or {"_none": 0})
+        want[pid[g]] = (len({r["url"] for r in rs}), dict(total))
+
+    got = {
+        r["partition_id"]: (r["url_count"], dict(r["counters"]))
+        for r in partition_metrics(extracted, "t", "extract").collect()
+    }
+    assert got == want
+    assert got[pid["err"]] == (3, {"_none": 0})
+    mix_count, mix = got[pid["mix"]]
+    assert mix_count == 6 and mix["_none"] == 0 and "blocks_emitted" in mix
+    ok_count, ok = got[pid["ok"]]
+    assert ok_count == 5 and "_none" not in ok
+
+    summed = Counter()
+    for _, counters in got.values():
+        summed.update({k: v for k, v in counters.items() if k != "_none"})
+    roll = {r["counter"]: r["total"] for r in corpus_counters(extracted).collect()}
+    assert dict(summed) == roll
+
+
+def test_resume_run_snapshot_states(spark, docs_df, tmp_path):
+    """A missing path or an empty directory means nothing is committed; an
+    unreadable snapshot raises instead of recommitting every document."""
+    from pdf_to_epub_spark.operators import resume_run
+
+    assert resume_run(docs_df, str(tmp_path / "missing")).count() == N_DOCS
+    (tmp_path / "empty").mkdir()
+    assert resume_run(docs_df, str(tmp_path / "empty")).count() == N_DOCS
+
+    corrupt = tmp_path / "corrupt"
+    with_doc_hash(docs_df).select("doc_hash").coalesce(1).write.parquet(str(corrupt))
+    (part,) = corrupt.glob("part-*.parquet")
+    part.write_bytes(b"not a parquet footer")
+    (corrupt / f".{part.name}.crc").unlink()  # so the footer read is what fails
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        resume_run(docs_df, str(corrupt)).count()
+
+
 def test_quarantine_on_error(spark):
     import datetime
 

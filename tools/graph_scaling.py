@@ -40,7 +40,7 @@ def run_level(cpus: int) -> dict:
         .config("spark.ui.enabled", "false")
         # the doubling rounds pin 4 generations of lazy localCheckpoint
         # blocks; the 1g default heap evicts them at 32 threads (lost
-        # rdd block -> FetchFailed), so size the driver like bench.py
+        # rdd block -> FetchFailed), so size the driver heap up front
         .config("spark.driver.memory", "16g")
         .appName(f"graph-scaling-{cpus}")
         .getOrCreate()
