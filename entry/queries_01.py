@@ -279,12 +279,11 @@ def _q_assemble_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship_package(spark)
     from pdf_to_epub_spark.operators import (
         assemble_documents,
-        blocks_table,
         extract_documents,
     )
 
     docs = _docs_as_pages(_t(spark, sf_dir, "documents"))
-    asm = assemble_documents(blocks_table(extract_documents(docs)))
+    asm = assemble_documents(extract_documents(docs))
     return asm.select(
         "url",
         F.sha2(F.encode("assembled_text", "UTF-8"), 256).alias("text_sha"),
@@ -397,7 +396,6 @@ def _q_html_boilerplate_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship_package(spark)
     from pdf_to_epub_spark.operators import (
         assemble_documents,
-        blocks_table,
         extract_html_documents,
     )
 
@@ -411,7 +409,7 @@ def _q_html_boilerplate_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang"),
         F.encode(page, "UTF-8").alias("html"),
     )
-    asm = assemble_documents(blocks_table(extract_html_documents(pages)))
+    asm = assemble_documents(extract_html_documents(pages))
     return asm.select(
         "url",
         F.sha2(F.encode("assembled_text", "UTF-8"), 256).alias("text_sha"),
@@ -433,7 +431,6 @@ def _q_readability_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship_package(spark)
     from pdf_to_epub_spark.operators import (
         assemble_documents,
-        blocks_table,
         extract_html_documents,
     )
 
@@ -447,9 +444,7 @@ def _q_readability_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang"),
         F.encode(page, "UTF-8").alias("html"),
     )
-    asm = assemble_documents(
-        blocks_table(extract_html_documents(pages, mode="readability"))
-    )
+    asm = assemble_documents(extract_html_documents(pages, mode="readability"))
     return asm.select(
         "url",
         F.sha2(F.encode("assembled_text", "UTF-8"), 256).alias("text_sha"),

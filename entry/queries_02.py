@@ -688,12 +688,11 @@ def _q_epub_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     STORED entry, fixed timestamps ⇒ byte-deterministic), hash-compared
     against a pure-Python replay of the same transform.  Bounded to 40
     docs per corpus so the oracle VALUES stay small; the plan shape is the
-    full-corpus one (narrow extract → one assembly shuffle → narrow
-    export)."""
+    full-corpus one (narrow extract → narrow assembly → LEFT join back
+    to the doc list → narrow export)."""
     _ship_package(spark)
     from pdf_to_epub_spark.operators import (
         assemble_documents,
-        blocks_table,
         extract_documents,
     )
 
@@ -703,10 +702,10 @@ def _q_epub_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang"),
         F.col("text"),
     )
-    # LEFT join from the doc list: a doc whose extraction yields zero
-    # blocks would otherwise vanish in blocks_table's explode while the
-    # oracle still carries its (valid, empty-body) EPUB row
-    assembled = assemble_documents(blocks_table(extract_documents(docs)))
+    # LEFT join from the doc list: assembly drops a doc whose extraction
+    # yields zero blocks, while the oracle still carries its (valid,
+    # empty-body) EPUB row
+    assembled = assemble_documents(extract_documents(docs))
     with_lang = docs.select("url", "lang").join(
         assembled.select("url", "blocks"), "url", "left"
     )
@@ -746,7 +745,6 @@ def _q_epub_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship_package(spark)
     from pdf_to_epub_spark.operators import (
         assemble_documents,
-        blocks_table,
         extract_documents,
     )
     from pdf_to_epub_spark.sources.epub import parse_epub_payloads
@@ -758,9 +756,7 @@ def _q_epub_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang"),
         F.col("text"),
     )
-    assembled = assemble_documents(
-        blocks_table(extract_documents(docs.drop("doc_id")))
-    )
+    assembled = assemble_documents(extract_documents(docs.drop("doc_id")))
     with_lang = docs.select("doc_id", "url", "lang").join(
         assembled.select("url", "blocks"), "url", "left"
     )

@@ -1073,7 +1073,6 @@ def _q_binary_decode_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship_package(spark)
     from pdf_to_epub_spark.operators import (
         assemble_documents,
-        blocks_table,
         decode_binary_pages,
         extract_documents,
     )
@@ -1089,7 +1088,7 @@ def _q_binary_decode_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "url", "warc_ts", "lang", F.encode(page, "UTF-8").alias("html")
     )
     decoded = decode_binary_pages(pages)
-    asm = assemble_documents(blocks_table(extract_documents(decoded)))
+    asm = assemble_documents(extract_documents(decoded))
     return asm.select(
         "url",
         F.sha2(F.encode("assembled_text", "UTF-8"), 256).alias("text_sha"),

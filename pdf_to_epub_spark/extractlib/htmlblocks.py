@@ -25,7 +25,7 @@ Design, per block:
 Kept blocks tile the assembled document exactly like the OCR mode: each
 block's text ends with ``\\n`` and spans index the concatenation, so
 ``"".join(b.text) == assembled_text`` (the same reassembly invariant the
-Spark assembly aggregation relies on), and blocks_table /
+Spark assembly projection relies on), and blocks_table /
 assemble_documents work unchanged on either mode's output.
 """
 

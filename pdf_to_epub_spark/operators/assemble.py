@@ -1,15 +1,17 @@
-"""Chapter / document assembly — the blocks → structured-document aggregation.
+"""Chapter / document assembly — extracted rows → structured documents.
 
 This is the `north_star`'s required aggregation (reference analog: the
 EPUB spine/TOC builder, `/root/reference/text-processing/legacy/
 Step4_create_epub.py:41-55,105-143` and ordered shard concat,
 `/root/reference/ocr-processing/merge_one_book.py:62-80`).
 
-Everything here is JVM-side Catalyst expressions — ``collect_list`` +
-``array_sort`` + higher-order functions — so assembly stays inside
-whole-stage codegen with exactly ONE shuffle (the groupBy on url).
-``array_sort`` on a struct orders by its first field, ``block_id``, which
-restores reading order regardless of shuffle arrival order.
+The extraction worker already emits one row per document with its
+``blocks`` array in reading order (every mode numbers ``block_id``
+0..n-1 in order), so assembly is one narrow projection of higher-order
+functions over that array: no explode, no shuffle, no sort, and one
+output document per extracted row — two captures of one url stay two
+documents.  Everything is JVM-side Catalyst expressions inside
+whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -18,40 +20,51 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def assemble_documents(blocks: DataFrame) -> DataFrame:
-    """(url, block_id, block_type, text, span_start, span_end) rows →
-    one structured row per url:
+def _is_heading(block):
+    return block["block_type"] == F.lit("heading")
+
+
+def assemble_documents(docs: DataFrame) -> DataFrame:
+    """Extracted rows (``EXTRACTED_SCHEMA``) → one structured row per
+    document with status ``ok`` and at least one block:
 
     * ``blocks``          — array<struct> in reading order
     * ``assembled_text``  — exact byte reassembly of the stage-3 document
     * ``toc``             — heading texts in order (the EPUB TOC)
     * ``n_chapters`` / ``n_blocks``
+
+    A per-row block table (``blocks_table`` output: no ``blocks``
+    column) is first nested by ``groupBy(url)`` + ``array_sort`` on
+    ``block_id`` — one shuffle.  Precondition of that form: one extracted
+    row per url, because the blocks of two captures of one url would
+    interleave by ``block_id`` into one document.
     """
-    ordered = F.array_sort(
-        F.collect_list(
-            F.struct("block_id", "block_type", "text", "span_start", "span_end")
+    if "blocks" in docs.columns:
+        nested = docs.where((F.col("status") == "ok") & (F.size("blocks") > 0))
+    else:
+        nested = docs.groupBy("url").agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        "block_id", "block_type", "text", "span_start", "span_end"
+                    )
+                )
+            ).alias("blocks")
         )
-    )
-    return (
-        blocks.groupBy("url")
-        .agg(ordered.alias("blocks"))
-        .select(
-            "url",
-            "blocks",
-            F.concat_ws(
-                "", F.transform("blocks", lambda b: b["text"])
-            ).alias("assembled_text"),
-            F.transform(
-                F.filter("blocks", lambda b: b["block_type"] == F.lit("heading")),
-                # NB: Spark's trim() strips spaces only; block slices carry
-                # trailing newlines/form-feeds, so strip all whitespace.
-                lambda b: F.regexp_replace(b["text"], r"^\s+|\s+$", ""),
-            ).alias("toc"),
-            F.size(
-                F.filter("blocks", lambda b: b["block_type"] == F.lit("heading"))
-            ).alias("n_chapters"),
-            F.size("blocks").alias("n_blocks"),
-        )
+    return nested.select(
+        "url",
+        "blocks",
+        F.concat_ws("", F.transform("blocks", lambda b: b["text"])).alias(
+            "assembled_text"
+        ),
+        F.transform(
+            F.filter("blocks", _is_heading),
+            # NB: Spark's trim() strips spaces only; block slices carry
+            # trailing newlines/form-feeds, so strip all whitespace.
+            lambda b: F.regexp_replace(b["text"], r"^\s+|\s+$", ""),
+        ).alias("toc"),
+        F.size(F.filter("blocks", _is_heading)).alias("n_chapters"),
+        F.size("blocks").alias("n_blocks"),
     )
 
 

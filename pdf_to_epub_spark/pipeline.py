@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from pdf_to_epub_spark.operators import (
     assemble_documents,
-    blocks_table,
     drop_exact_duplicates,
     drop_near_duplicates,
     extract_documents,
@@ -85,6 +84,9 @@ def ingest(
     registrable-domain blocklist the same way."""
     audit: dict[str, DataFrame] = {}
 
+    # argument checks first: the politeness gates below run Spark jobs
+    if html_mode and pdf_mode:
+        raise ValueError("pick one of html_mode / pdf_mode")
     if robots_txt is not None and not html_mode:
         raise ValueError("robots_txt gating needs html_mode pages")
     n_raw = None
@@ -128,26 +130,20 @@ def ingest(
             # documents: skip those too.
             pages = pending_documents(with_doc_hash(pages, "text"), done_hashes)
 
-    if html_mode and pdf_mode:
-        raise ValueError("pick one of html_mode / pdf_mode")
     if pdf_mode:
         extractor = extract_pdf_documents
     elif html_mode:
         extractor = extract_html_documents
     else:
         extractor = extract_documents
-    # checkpoint the extractor output itself: both the assembly branch and
-    # the status audit read it, and without the barrier materializing
-    # audit["extracted"] re-runs the whole Python extraction pass
+    # checkpoint the extractor output itself: the assembly projection, the
+    # quality gate, the dedup stages and the status audit all read it, and
+    # without the barrier each would re-run the whole Python extraction pass
     extracted = extractor(pages, salt_partitions=salt_partitions).localCheckpoint(
         eager=False
     )
-    docs = (
-        assemble_documents(blocks_table(extracted))
-        .select("url", F.col("assembled_text").alias("text"))
-        # one materialization: the quality gate and the dedup stages'
-        # text accesses would each re-run the Python extraction otherwise
-        .localCheckpoint(eager=False)
+    docs = assemble_documents(extracted).select(
+        "url", F.col("assembled_text").alias("text")
     )
     audit["extracted"] = extracted.groupBy("status").count()
 

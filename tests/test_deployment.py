@@ -28,7 +28,6 @@ from pyspark.sql import SparkSession
 
 from pdf_to_epub_spark.operators import (
     assemble_documents,
-    blocks_table,
     extract_documents,
 )
 from pdf_to_epub_spark.sources.synth import make_documents
@@ -42,7 +41,7 @@ pages = spark.createDataFrame(
     make_documents(8, seed=7),
     "url string, warc_ts timestamp, html binary, text string, lang string",
 )
-docs = assemble_documents(blocks_table(extract_documents(pages)))
+docs = assemble_documents(extract_documents(pages))
 n = docs.count()
 assert n == 8, n
 print("PYFILES_SMOKE_OK", n)

@@ -126,12 +126,28 @@ def test_spark_operator_roundtrip(spark):
             (f"doc://{i}", make_boilerplate_page(i, f"doc://{i}", text), "en",
              expected_main_content(i, text))
         )
+    # an empty page (status ok, zero blocks) and a null one (status error)
+    # must be dropped by both assembly input forms
+    edge = [("doc://empty", b"", "en", None), ("doc://null", None, "en", None)]
     df = spark.createDataFrame(
-        rows, "url string, html binary, lang string, expected string"
+        rows + edge, "url string, html binary, lang string, expected string"
     ).withColumn("warc_ts", F.to_timestamp(F.lit("2025-01-01 00:00:00")))
 
-    extracted = extract_html_documents(df, salt_partitions=4)
-    asm = assemble_documents(blocks_table(extracted))
+    extracted = extract_html_documents(df, salt_partitions=4).localCheckpoint()
+    statuses = {
+        r["url"]: (r["status"], r["n_blocks"])
+        for r in extracted.where(F.col("url").isin("doc://empty", "doc://null"))
+        .collect()
+    }
+    assert statuses == {"doc://empty": ("ok", 0), "doc://null": ("error", 0)}
+    asm = assemble_documents(extracted)
+    plan = asm._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Generate" not in plan, plan
+    by_url = {r["url"]: r.asDict(recursive=True) for r in asm.collect()}
+    assert by_url == {
+        r["url"]: r.asDict(recursive=True)
+        for r in assemble_documents(blocks_table(extracted)).collect()
+    }
     joined = asm.join(df.select("url", "expected"), "url")
     bad = joined.where(F.col("assembled_text") != F.col("expected")).count()
     assert bad == 0
@@ -144,7 +160,10 @@ def test_spark_operator_roundtrip(spark):
     import hashlib
 
     hashes = extracted.select("url", "doc_hash").collect()
-    assert dict(hashes) == {u: hashlib.sha256(h).hexdigest() for u, h, *_ in rows}
+    assert dict(hashes) == {
+        u: hashlib.sha256(h).hexdigest() if h is not None else None
+        for u, h, *_ in rows + edge
+    }
 
 
 def test_numwords_classifier_rule():
@@ -363,7 +382,6 @@ def test_html_blocks_to_epub_sink(spark):
     from pdf_to_epub_spark.export import epub_bytes
     from pdf_to_epub_spark.operators import (
         assemble_documents,
-        blocks_table,
         extract_html_documents,
     )
 
@@ -372,7 +390,7 @@ def test_html_blocks_to_epub_sink(spark):
         [("doc://2", make_boilerplate_page(2, "doc://2", text), "en")],
         "url string, html binary, lang string",
     ).withColumn("warc_ts", F.to_timestamp(F.lit("2025-01-01 00:00:00")))
-    asm = assemble_documents(blocks_table(extract_html_documents(df))).collect()[0]
+    asm = assemble_documents(extract_html_documents(df)).collect()[0]
     payload = epub_bytes(
         [b.asDict() for b in asm["blocks"]], title="doc://2", lang="en"
     )

@@ -242,6 +242,25 @@ def test_ingest_politeness_gates(spark):
     assert kept <= allowed and kept
 
 
+def test_ingest_rejects_conflicting_modes_before_any_job(spark):
+    """Argument errors surface before the politeness gates run their
+    counting jobs: pages whose evaluation fails are never evaluated."""
+    import pytest
+
+    pages = _pages(spark, make_documents(2, seed=5)).where(
+        F.raise_error(F.lit("pages were evaluated")).isNull()
+    )
+    blocked = spark.createDataFrame([("site2.example",)], "domain string")
+    sc = spark.sparkContext
+    sc.setJobGroup("ingest-args", "argument check")
+    try:
+        with pytest.raises(ValueError, match="pick one of html_mode / pdf_mode"):
+            ingest(pages, html_mode=True, pdf_mode=True, blocked_domains=blocked)
+        assert sc.statusTracker().getJobIdsForGroup("ingest-args") == []
+    finally:
+        sc.setJobGroup(None, None)
+
+
 def test_ingest_script_and_compression_gates(spark):
     rows = make_documents(12, seed=33)
     # a Cyrillic doc the latin-only script gate must drop

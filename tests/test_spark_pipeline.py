@@ -8,6 +8,7 @@ of the raw input byte-for-byte — the `north_rule` invariant, distributed.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from pdf_to_epub_spark.extractlib import transform_text
 from pdf_to_epub_spark.operators import (
@@ -24,6 +25,7 @@ from pdf_to_epub_spark.operators import (
 from pdf_to_epub_spark.sources.synth import make_documents
 
 N_DOCS = 40
+PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
 @pytest.fixture(scope="module")
@@ -50,24 +52,61 @@ def test_extract_matches_pure_python(docs_df, extracted):
         assert got[url] == expected, f"stage-3 mismatch for {url}"
 
 
-def test_blocks_and_assembly_roundtrip(docs_df, extracted):
-    blocks = blocks_table(extracted)
-    assembled = assemble_documents(blocks)
+def _by_url(df) -> dict:
+    return {r["url"]: r.asDict(recursive=True) for r in df.collect()}
+
+
+def test_blocks_and_assembly_roundtrip(spark, docs_df):
+    """Both input forms of ``assemble_documents`` build the same documents:
+    the extracted rows (one narrow projection) and the per-row block table
+    (nested by a groupBy on url).  An empty-text doc (status ok, zero
+    blocks) and an oversized one (status quarantined) are dropped by both."""
     raw = {r["url"]: r["text"] for r in docs_df.select("url", "text").collect()}
-    rows = assembled.collect()
-    assert len(rows) == N_DOCS
-    for r in rows:
-        expected, _ = transform_text(raw[r["url"]])
+    max_chars = max(len(t) for t in raw.values())
+    edge = spark.createDataFrame(
+        [("u://empty", None, None, "", "en"),
+         ("u://oversized", None, None, "x" * (max_chars + 1), "en")],
+        PAGES_SCHEMA,
+    )
+    extracted = extract_documents(
+        docs_df.unionByName(edge), max_doc_chars=max_chars
+    ).localCheckpoint()
+    statuses = {
+        r["url"]: (r["status"], r["n_blocks"])
+        for r in extracted.where(F.col("url").startswith("u://")).collect()
+    }
+    assert statuses == {"u://empty": ("ok", 0), "u://oversized": ("quarantined", 0)}
+
+    narrow = assemble_documents(extracted)
+    plan = narrow._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Generate" not in plan, plan
+    rows = _by_url(narrow)
+    assert rows == _by_url(assemble_documents(blocks_table(extracted)))
+    assert set(rows) == set(raw)
+    for url, r in rows.items():
+        expected, _ = transform_text(raw[url])
         assert r["assembled_text"] == expected
         assert all(t.startswith("CHAPTER ") for t in r["toc"])
         assert r["n_chapters"] == len(r["toc"])
         ids = [b["block_id"] for b in r["blocks"]]
-        assert ids == sorted(ids) == list(range(len(ids)))
+        assert ids == sorted(ids) == list(range(len(ids))) == list(range(r["n_blocks"]))
+
+
+def test_duplicate_capture_assembles_two_documents(spark):
+    """Two captures of one url are two documents, each the transform of
+    its own capture, never one document interleaving both."""
+    captures = [r["text"] for r in make_documents(2, seed=31)]
+    pages = spark.createDataFrame(
+        [("doc://same", None, None, t, "en") for t in captures], PAGES_SCHEMA
+    )
+    got = sorted(
+        r["assembled_text"]
+        for r in assemble_documents(extract_documents(pages)).collect()
+    )
+    assert got == sorted(transform_text(t)[0] for t in captures)
 
 
 def test_block_spans_monotone(extracted):
-    from pyspark.sql import functions as F
-
     blocks = blocks_table(extracted)
     bad = blocks.where(
         (F.col("span_start") >= F.col("span_end"))
@@ -132,8 +171,6 @@ def test_partition_metrics_edge_partitions(spark):
     docs keeps its real keys, adds ``_none`` and counts distinct urls; the
     per-key sums over all partitions equal `corpus_counters`."""
     from collections import Counter
-
-    from pyspark.sql import functions as F
 
     texts = [r["text"] for r in make_documents(9, seed=7)]
     rows = (
