@@ -9,3 +9,9 @@ analysis) such a corpus pipeline needs at 10^12-document scale.
 """
 
 __version__ = "0.1.0"
+
+from . import _pyworker
+
+# In a Spark Python worker: stop each task re-reading unchanged zip-import
+# directories (see _pyworker); elsewhere a no-op.
+_pyworker.install()

@@ -3,7 +3,7 @@
 Spark-first design notes (what holds at 100 TB / 1000 executors):
 
 * **No shuffle in the extract itself.**  The transform is document-local, so
-  it runs as ``mapInPandas`` over whatever partitioning the scan produced —
+  it runs as ``mapInArrow`` over whatever partitioning the scan produced —
   a narrow stage fused with the parquet scan.  The only optional shuffle is
   an explicit url-hash ``repartition`` to break WARC-capture skew *before*
   the CPU-heavy stage, so stragglers are bounded by doc size, not by
@@ -11,6 +11,9 @@ Spark-first design notes (what holds at 100 TB / 1000 executors):
 * **Arrow-batched, no per-row Python at the API layer.**  One Python worker
   per core receives column batches; regexes are compiled once per worker at
   import time (extractlib module constants).
+* **Fixed per-task worker cost**: before each task a reused worker would
+  re-read every zip-import directory (pyspark.zip, a ``--py-files`` zip);
+  importing the package stops that for unchanged archives (``_pyworker``).
 * **doc_hash computed JVM-side** (``resume.doc_hash_column``) so the
   binary column never crosses into Python unless the caller asks for
   binary decode.

@@ -2,8 +2,10 @@
 
 Targets a multi-executor cluster; on this sandbox it runs ``local[N]``.
 All knobs here matter at 100 TB: AQE for runtime re-planning and skew-join
-splitting, Arrow for the pandas-UDF extraction path, and bounded Arrow batch
-sizes so one heavy-tailed document batch can't blow executor memory.
+splitting, Arrow for pandas conversions (``toPandas``, ``createDataFrame``
+from pandas), and bounded Arrow batch sizes for the ``mapInArrow``
+extraction and the pandas UDFs, so one heavy-tailed document batch can't
+blow executor memory.
 """
 
 from __future__ import annotations

@@ -52,6 +52,63 @@ def test_extract_matches_pure_python(docs_df, extracted):
         assert got[url] == expected, f"stage-3 mismatch for {url}"
 
 
+def test_workers_keep_unchanged_zip_directories(spark, extracted):
+    """Importing the package in a Python worker wraps
+    ``zipimporter.invalidate_caches`` there, and only there: a task of a
+    reused worker reads no unchanged zip directory again."""
+    import zipimport
+
+    from pdf_to_epub_spark import _pyworker
+
+    extracted.count()
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        from pdf_to_epub_spark import _pyworker
+
+        # In a worker's first task the wrapper is installed only after
+        # setup_spark_files ran, so this call records the identities.
+        importlib.invalidate_caches()
+        reads = []
+        stdlib_read = zipimport._read_directory
+        zipimport._read_directory = lambda path: reads.append(path) or stdlib_read(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = stdlib_read
+        for _ in batches:
+            pass
+        wrapped = zipimport.zipimporter.invalidate_caches is _pyworker._invalidate_caches
+        zip_importers = sum(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        yield pa.RecordBatch.from_pydict(
+            {
+                "wrapped": [wrapped],
+                "zip_importers": [zip_importers],
+                "reads": [len(reads)],
+            }
+        )
+
+    rows = (
+        spark.range(0, 8, numPartitions=4)
+        .mapInArrow(probe, "wrapped boolean, zip_importers long, reads long")
+        .collect()
+    )
+    assert len(rows) == 4
+    for r in rows:
+        assert r["wrapped"], r
+        assert r["zip_importers"] > 0, r  # pyspark.zip at least
+        assert r["reads"] == 0, r
+    assert zipimport.zipimporter.invalidate_caches is _pyworker._stdlib_invalidate_caches
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+
 def _by_url(df) -> dict:
     return {r["url"]: r.asDict(recursive=True) for r in df.collect()}
 
