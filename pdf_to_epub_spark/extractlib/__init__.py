@@ -8,7 +8,7 @@ into ``/root/reference/``.
 from .blocks import Block, chapter_struct, reassemble, segment_blocks
 from .cleanup import run_stage1
 from .formatting import DEFAULT_MONEY_TERMS, run_stage2
-from .pipeline import ExtractResult, content_hash, extract_document, transform_text
+from .pipeline import ExtractResult, extract_document, transform_text
 from .structure import run_stage3
 
 __all__ = [
@@ -16,7 +16,6 @@ __all__ = [
     "DEFAULT_MONEY_TERMS",
     "ExtractResult",
     "chapter_struct",
-    "content_hash",
     "extract_document",
     "reassemble",
     "run_stage1",

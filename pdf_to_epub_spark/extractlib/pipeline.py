@@ -7,7 +7,6 @@ match/replace work only.
 
 from __future__ import annotations
 
-import hashlib
 from dataclasses import dataclass, field
 
 from .blocks import Block, segment_blocks
@@ -83,9 +82,3 @@ def extract_document(
         return ExtractResult(stage3, blocks, counters)
     except Exception as exc:  # noqa: BLE001 — quarantine, don't kill the task
         return ExtractResult("", [], {}, status="error", error=repr(exc)[:500])
-
-
-def content_hash(payload: bytes) -> str:
-    """SHA-256 identity used by the resume index
-    (`/root/reference/pdf_to_epub.sh:162-164`)."""
-    return hashlib.sha256(payload).hexdigest()

@@ -97,7 +97,7 @@ def append_run(spark: SparkSession, df: DataFrame, table: str) -> None:
     """Append a run's output as one atomic commit: an Iceberg snapshot
     (``writeTo(...).append()``) when the runtime is present, a parquet
     managed-table append otherwise.  Pair with
-    :func:`committed_hashes` + ``operators.resume.resume_pending`` for
+    :func:`committed_hashes` + ``operators.resume.pending_documents`` for
     the resume-from-last-committed-snapshot loop."""
     if iceberg_available(spark):
         df.writeTo(table).append()
@@ -108,15 +108,16 @@ def append_run(spark: SparkSession, df: DataFrame, table: str) -> None:
 def committed_hashes(
     spark: SparkSession, table: str, hash_col: str = "doc_hash"
 ) -> DataFrame:
-    """The committed-work index the resume anti-join runs against: the
-    distinct content hashes present in the table's CURRENT snapshot (an
-    aborted run's uncommitted files are invisible to an Iceberg read, and
-    absent from the parquet emulation because saveAsTable appends are
-    task-committed).  Returns an empty frame when the table doesn't exist
-    yet — first run resumes from nothing."""
+    """The committed-work index the resume probe runs against: the content
+    hashes present in the table's CURRENT snapshot (an aborted run's
+    uncommitted files are invisible to an Iceberg read, and absent from the
+    parquet emulation because saveAsTable appends are task-committed).  Not
+    deduplicated: the resume probe is a semi-join and needs no unique
+    keys.  Returns an empty frame when the table doesn't exist yet —
+    first run resumes from nothing."""
     if not spark.catalog.tableExists(table):
         return spark.createDataFrame([], f"{hash_col} string")
-    return spark.table(table).select(hash_col).distinct()
+    return spark.table(table).select(hash_col)
 
 
 def plan_has_exchange(df: DataFrame) -> bool:

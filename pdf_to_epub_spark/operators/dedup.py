@@ -482,17 +482,6 @@ def incremental_pair_batch(
     )
 
 
-def _fs_exists(spark, path: str) -> bool:
-    """Path existence through the Hadoop FileSystem API, so signature-store
-    reuse works for ANY URI scheme (hdfs://, s3a://, file:); a plain
-    ``pathlib.Path.exists()`` silently returns False for remote URIs and
-    would rebuild + rewrite the signature table every run."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def minhash_candidate_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -502,7 +491,6 @@ def minhash_candidate_pairs(
     bands: int = 16,
     jaccard_threshold: float = 0.5,
     signatures_path: str | None = None,
-    reuse_signatures: bool = False,
     max_bucket: int = 4096,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs with exact-Jaccard verification.
@@ -518,7 +506,7 @@ def minhash_candidate_pairs(
     generation (sorted collect_list + combination explode), not a self-join,
     so there is no second plan branch to feed and nothing to persist.  With
     ``signatures_path`` the slim ``(id, sig)`` table is written once and
-    reused across runs/banding configs (the form that holds at 100 TB).
+    banding reads it back instead of recomputing the signatures.
     The full shingle arrays never ride through a shuffle: exact-Jaccard
     verification re-shingles only the candidate rows after the broadcast
     probe.  A degenerate band value (all-identical docs) makes one giant
@@ -530,10 +518,8 @@ def minhash_candidate_pairs(
     """
     sigs = minhash_signatures(df, text_col, id_col, k, num_hashes)
     if signatures_path is not None:
-        spark = df.sparkSession
-        if not (reuse_signatures and _fs_exists(spark, signatures_path)):
-            sigs.write.mode("overwrite").parquet(signatures_path)
-        sigs = spark.read.parquet(signatures_path)
+        sigs.write.mode("overwrite").parquet(signatures_path)
+        sigs = df.sparkSession.read.parquet(signatures_path)
 
     pairs = _lsh_band_pairs(sigs, id_col, num_hashes, bands, max_bucket)
     return _verify_pairs_exact_jaccard(df, pairs, text_col, id_col, k, jaccard_threshold)
@@ -771,7 +757,6 @@ def drop_near_duplicates(
     bands: int = 16,
     jaccard_threshold: float = 0.5,
     signatures_path: str | None = None,
-    reuse_signatures: bool = False,
     max_bucket: int = 4096,
 ) -> DataFrame:
     """Greedy near-duplicate REMOVAL on top of the MinHash+LSH pairs: drop
@@ -782,7 +767,7 @@ def drop_near_duplicates(
     the survivor set is SQL-oracle-checkable."""
     pairs = minhash_candidate_pairs(
         df, text_col, id_col, k, num_hashes, bands, jaccard_threshold,
-        signatures_path, reuse_signatures, max_bucket,
+        signatures_path, max_bucket,
     )
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(losers, id_col, "left_anti")

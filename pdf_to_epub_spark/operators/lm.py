@@ -538,7 +538,6 @@ def kn_bigram_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     vocab_size: int = 256,
-    broadcast_pairs: bool = True,
 ) -> DataFrame:
     """Score documents under a :func:`train_kn_bigram` model: per doc,
     the number of scored word pairs and the total cost in integer
@@ -559,11 +558,9 @@ def kn_bigram_scores(
 
     Scale: all stat joins probe INTEGER vocab ids (the token stream maps
     through the broadcast vocab once, then never carries a string);
-    ``ctx``/``cont`` are ≤(k+1)-row broadcasts; the pair table broadcast
-    is the ``broadcast_pairs`` flag (default on — top-k vocabularies
-    keep it small; at 100 TB with a 100k vocab switch it off and the
-    join shuffles slim int pairs with AQE).  Doc totals collapse
-    map-side to one row per doc before the only wide shuffle."""
+    ``ctx``/``cont`` are ≤(k+1)-row broadcasts and the pair table is
+    broadcast too (top-k vocabularies keep it small).  Doc totals
+    collapse map-side to one row per doc before the only wide shuffle."""
     vocab, pairs_c, ctx, cont, scalars = model
     scored = _map_idx(
         _map_idx(
@@ -574,24 +571,8 @@ def kn_bigram_scores(
         vocab,
         "w2",
     )
-    return _kn_score_stream(
-        scored, (pairs_c, ctx, cont, scalars), id_col, vocab_size,
-        broadcast_pairs,
-    )
-
-
-def _kn_score_stream(
-    scored: DataFrame,
-    stats: tuple[DataFrame, DataFrame, DataFrame, DataFrame],
-    id_col: str,
-    vocab_size: int,
-    broadcast_pairs: bool,
-) -> DataFrame:
-    """Per-doc micro-nat totals from a mapped integer pair stream and the
-    KN count tables (the join/cost/rollup shared by
-    :func:`kn_bigram_scores` and :func:`kn_self_scores`)."""
     return (
-        _kn_cost_stream(scored, stats, vocab_size, broadcast_pairs)
+        _kn_cost_stream(scored, (pairs_c, ctx, cont, scalars), vocab_size)
         .groupBy("doc_id")
         .agg(
             F.count("_cost").alias("n_bigrams"),
@@ -607,24 +588,20 @@ def _kn_cost_stream(
     scored: DataFrame,
     stats: tuple[DataFrame, DataFrame, DataFrame, DataFrame],
     vocab_size: int,
-    broadcast_pairs: bool,
 ) -> DataFrame:
     """The KN join/cost core: mapped integer pair stream + count tables
     → ``(doc_id, _cost)`` rows (one per scored bigram, integer
     micro-nats; NULL-cost marker rows for bigram-less docs from
     ``keep_empty`` streams).  Shared by the total-sum rollup
-    (:func:`_kn_score_stream`) and the per-doc order statistics
+    (:func:`kn_bigram_scores`) and the per-doc order statistics
     (:func:`mink_prob_scores`)."""
     import math
 
     pairs_c, ctx, cont, scalars = stats
     uniform_micro = round(math.log(vocab_size + 1) * 1e6)
-    pc = pairs_c
-    if broadcast_pairs:
-        pc = F.broadcast(pc)
     dec = "decimal(38,0)"
     j = (
-        scored.join(pc, ["w1", "w2"], "left")
+        scored.join(F.broadcast(pairs_c), ["w1", "w2"], "left")
         .join(F.broadcast(ctx), "w1", "left")
         .join(F.broadcast(cont), "w2", "left")
         .crossJoin(F.broadcast(scalars))
@@ -665,7 +642,6 @@ def mink_prob_scores(
     text_col: str = "text",
     vocab_size: int = 256,
     k_pct: int = 20,
-    broadcast_pairs: bool = True,
 ) -> DataFrame:
     """Min-K% Prob membership/contamination signal (Shi et al. 2024,
     "Detecting Pretraining Data from Large Language Models"): per doc,
@@ -698,9 +674,7 @@ def mink_prob_scores(
         vocab,
         "w2",
     )
-    costs = _kn_cost_stream(
-        scored, (pairs_c, ctx, cont, scalars), vocab_size, broadcast_pairs
-    )
+    costs = _kn_cost_stream(scored, (pairs_c, ctx, cont, scalars), vocab_size)
     per = costs.groupBy("doc_id").agg(
         F.count("_cost").alias("n_bigrams"),
         F.sort_array(F.collect_list("_cost"), asc=False).alias("_cs"),

@@ -6,9 +6,12 @@ Spark re-expression of the reference's content-hash resume index
 skip-if-output-exists memoization (`pdf_to_epub.sh:216-219`).
 
 The committed-results table (parquet/Iceberg snapshot) holds ``doc_hash``
-per finished document; resuming a run is a ``left_anti`` join of the input
-against it.  The done-side is typically tiny relative to the input, so it
-is broadcast — no shuffle of the 100 TB side.
+per finished document.  Like the reference, which probes its index with
+each input's own hash, resuming probes the committed table with the
+batch: a semi-join keeps the committed hashes that occur in the batch,
+and the batch is anti-joined against that hit set.  In a recrawl loop the
+committed side is the large one and keeps growing, so it is only ever
+streamed — never aggregated, never a broadcast build side.
 """
 
 from __future__ import annotations
@@ -45,16 +48,12 @@ def with_doc_hash(docs: DataFrame, payload_col: str = "html") -> DataFrame:
 
 
 def pending_documents(
-    docs: DataFrame,
-    done: DataFrame,
-    hash_col: str = "doc_hash",
-    broadcast_done: bool = True,
+    docs: DataFrame, done: DataFrame, hash_col: str = "doc_hash"
 ) -> DataFrame:
-    """Input minus already-committed rows (anti-join on content hash)."""
-    done_keys = done.select(hash_col).distinct()
-    if broadcast_done:
-        done_keys = F.broadcast(done_keys)
-    return docs.join(done_keys, on=hash_col, how="left_anti")
+    """Input minus already-committed rows, keyed on content hash.  Rows
+    with a null hash never match, so they stay pending."""
+    hits = done.select(hash_col).join(docs.select(hash_col), hash_col, "left_semi")
+    return docs.join(hits, hash_col, "left_anti")
 
 
 def resume_run(
@@ -62,11 +61,11 @@ def resume_run(
     committed_path: str,
     payload_col: str = "html",
 ) -> DataFrame:
-    """Convenience wrapper: hash the input, anti-join against the committed
-    snapshot at ``committed_path``.  A missing path or an empty directory
-    means nothing is committed yet (→ full input); any other read error,
-    e.g. an unreadable part file, is raised rather than silently
-    recommitting every document."""
+    """Convenience wrapper: hash the input, drop what the committed
+    snapshot at ``committed_path`` already holds.  A missing path or an
+    empty directory means nothing is committed yet (→ full input); any
+    other read error, e.g. an unreadable part file, is raised rather than
+    silently recommitting every document."""
     spark = docs.sparkSession
     hashed = with_doc_hash(docs, payload_col)
     try:

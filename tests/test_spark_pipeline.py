@@ -185,12 +185,85 @@ def test_binary_decode_path(spark, docs_df):
 
 
 def test_resume_anti_join(spark, docs_df):
-    hashed = with_doc_hash(docs_df)
-    done = hashed.limit(15).select("doc_hash")
-    pending = pending_documents(hashed, done)
-    assert pending.count() == N_DOCS - 15
-    # resuming with everything done → empty
-    assert pending_documents(hashed, hashed.select("doc_hash")).count() == 0
+    """The pending rows are exactly the batch rows whose hash is not in the
+    done set (a Python set difference), for every edge of the probe: a null
+    payload stays pending, null and duplicated done hashes change nothing,
+    two batch rows with one payload share their fate."""
+    import hashlib
+
+    base = [r.asDict() for r in docs_df.collect()]
+    batch = base + [
+        dict(base[0], url="dup://0"),  # same payload as a committed row
+        dict(base[20], url="dup://20"),  # same payload as a pending row
+        dict(base[1], url="null://0", html=None),
+    ]
+    digest = [hashlib.sha256(r["html"]).hexdigest() for r in base]
+    hashed = with_doc_hash(spark.createDataFrame(batch, PAGES_SCHEMA))
+    cases = {
+        "first 15": digest[:15],
+        "nulls and repeats": digest[:15] + [None, None] + digest[:5] * 3,
+        "empty": [],
+        "superset": digest + ["0" * 64, None] + digest[30:],
+    }
+    for name, done_hashes in cases.items():
+        done = spark.createDataFrame([(h,) for h in done_hashes], "doc_hash string")
+        got = sorted(r["url"] for r in pending_documents(hashed, done).collect())
+        committed = set(done_hashes) - {None}
+        want = sorted(
+            r["url"]
+            for r in batch
+            if r["html"] is None
+            or hashlib.sha256(r["html"]).hexdigest() not in committed
+        )
+        assert got == want, name
+    assert "null://0" in got  # a null hash never matches, even a full index
+
+
+def _plan_paths(node, up=()):
+    """(node, path) for every node of a physical plan, where path holds an
+    (ancestor, child index) pair per level; adaptive-plan wrappers and
+    query stages are looked through."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _plan_paths(node.executedPlan(), up)
+        return
+    if name.endswith("QueryStage"):
+        yield from _plan_paths(node.plan(), up)
+        return
+    yield node, up
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_paths(children.apply(i), (*up, (node, i)))
+
+
+def test_resume_probe_streams_the_committed_scan(spark, docs_df, tmp_path):
+    """Over a small batch the planner builds on the batch hashes: the
+    committed scan is the streamed (left) side of a broadcast LeftSemi
+    join, under no aggregate and no broadcast of its own."""
+    from pdf_to_epub_spark.operators import resume_run
+
+    batch, committed = tmp_path / "batch", tmp_path / "committed"
+    docs_df.write.parquet(str(batch))
+    done = with_doc_hash(docs_df).orderBy("url").select("doc_hash").limit(15)
+    done.union(done).write.parquet(str(committed))  # a committed hash may repeat
+
+    pending = resume_run(spark.read.parquet(str(batch)), str(committed))
+    assert len(pending.collect()) == N_DOCS - 15
+    plan = pending._jdf.queryExecution().executedPlan()  # noqa: SLF001
+    (path,) = [
+        up
+        for node, up in _plan_paths(plan)
+        if node.getClass().getSimpleName() == "FileSourceScanExec"
+        and node.relation().location().rootPaths().apply(0).getName() == "committed"
+    ]
+    names = [n.nodeName() for n, _ in path]
+    assert "HashAggregate" not in names
+    k = max(i for i, n in enumerate(names) if "Join" in n)
+    join, side = path[k]
+    assert names[k] == "BroadcastHashJoin"
+    assert join.joinType().toString() == "LeftSemi"
+    assert join.buildSide().toString() == "BuildRight" and side == 0
+    assert "BroadcastExchange" not in names[k:]
 
 
 def test_doc_hash_is_sha256_of_stored_bytes(spark):
