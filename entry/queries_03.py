@@ -724,12 +724,12 @@ def _q_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fused pre-training quality gate, arrow engine: Gopher + line-dup
-    signals in codegen column algebra and the top-bigram coverage in a
-    vectorized Arrow batch — ZERO shuffles (plan-pinned in tests).  The
-    oracle replays the relational composition (gopher ⋈ repetition) in
-    DuckDB, so the per-row histogram path is verified against the
-    explode/groupBy algebra term-for-term."""
+    """Fused pre-training quality gate: Gopher + line-dup signals in
+    codegen column algebra and the top-bigram coverage in a vectorized
+    Arrow batch — ZERO shuffles (plan-pinned in tests).  The oracle
+    replays the relational composition (gopher ⋈ repetition) in DuckDB,
+    so the per-row histogram path is verified against the explode/groupBy
+    algebra term-for-term."""
     _ship_package(spark)
     from pdf_to_epub_spark.operators import quality_gate
 

@@ -28,12 +28,8 @@ from __future__ import annotations
 import re
 from typing import NamedTuple
 
-BLOCK_TYPES = ("title", "volume", "heading", "paragraph", "hr", "page_break")
-
 _HEADING_LINE = re.compile(r"^CHAPTER\s+[IVXLCDM]+$")
 _VOLUME_LINE = re.compile(r"^VOLUME\s+[0-9IVXLCDM]+$", re.IGNORECASE)
-_HR_LINE = re.compile(r"^---$")
-_PAGEBREAK_LINE = re.compile(r"^\f$")
 _HAS_LOWER = re.compile(r"[a-zà-öø-ÿ]")
 
 
@@ -43,27 +39,6 @@ class Block(NamedTuple):
     text: str
     span_start: int
     span_end: int
-
-
-def _classify_line(line: str) -> str | None:
-    """Type of a single *marker* line, or None for ordinary content.
-
-    NB: ``str.strip()`` eats the form feed itself, so the page-break test
-    runs on the line stripped of spaces/tabs only.
-
-    The marker patterns are anchored full-line forms, so the first two
-    collapse to string equality and the CHAPTER regex only runs behind a
-    prefix test — ordinary content lines never enter the regex engine
-    (r6; ~15% of segment_blocks wall on the bench corpus).
-    """
-    if line.strip(" \t") == "\f":
-        return "page_break"
-    stripped = line.strip()
-    if stripped.startswith("CHAPTER") and _HEADING_LINE.match(stripped):
-        return "heading"
-    if stripped == "---":
-        return "hr"
-    return None
 
 
 def segment_blocks(stage3_text: str) -> list[Block]:
@@ -84,9 +59,11 @@ def segment_blocks(stage3_text: str) -> list[Block]:
         return []
 
     # Single walk: char offsets tracked inline; each line stripped ONCE
-    # per flavor and the marker tests inlined on those strings (the
-    # _classify_line fast-path rules — r6; the old flow re-stripped every
-    # line up to four times and carried an unused end offset).
+    # per flavor and the marker tests inlined on those strings.  The
+    # page-break test runs on the line stripped of spaces/tabs only
+    # (``str.strip()`` eats the form feed itself); the CHAPTER regex only
+    # runs behind a prefix test, so ordinary content lines never enter
+    # the regex engine.
     starts: list[tuple[int, str]] = []  # (char offset, block_type)
     in_paragraph = False
     seen_marker = False

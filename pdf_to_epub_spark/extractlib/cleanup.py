@@ -25,10 +25,8 @@ from typing import Iterable
 # (reference Step1_ocr_cleanup_v11.py:65-192)
 # --------------------------------------------------------------------------
 
-# Anchor vocabulary: a block must contain one of these to be considered.
-_ANCHOR_VOLUME = re.compile(r"(?i)\bvolume\b")
-_ANCHOR_SERIES = re.compile(r"(?i)\bhistory\s+of\s+my\s+life\b")
-# Single-pass disjunction of the two anchors (same boolean outcome).
+# Anchor vocabulary: a block must mention the volume or the series title
+# to be considered.
 _ANCHOR_EITHER = re.compile(r"(?i)\bvolume\b|\bhistory\s+of\s+my\s+life\b")
 _INLINE_CHAPTER = re.compile(r"(?i)\bchapter\b")
 
@@ -314,7 +312,6 @@ _STAGE1_MOJIBAKE: tuple[tuple[str, str], ...] = (
     ("Ã”", "Ô"), ("Ã–", "Ö"),
 )
 
-_WORD_TOKEN = re.compile(r"[A-Za-zÀ-ÖØ-öø-ÿ'’-]{2,}")
 _WORD_TOKEN_WITH_MOJIBAKE = re.compile(
     r"[A-Za-zÀ-ÖØ-öø-ÿ'’-]*Ã[A-Za-zÀ-ÖØ-öø-ÿ'’-]*"
 )

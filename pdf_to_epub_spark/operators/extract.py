@@ -71,13 +71,10 @@ EXTRACTED_SCHEMA = StructType(
     ]
 )
 
-BLOCKS_OUT_COLUMNS = ("url", "block_id", "block_type", "text", "span_start", "span_end")
-
-
-def _result_batches_arrow(fn, input_col: str):
+def _result_batches_arrow(fn):
     """mapInArrow worker factory: run ``fn(value) -> ExtractResult`` over
-    ``input_col`` of each batch (OCR mode: stage1→2→3 over ``text``; HTML
-    mode: parse+classify over ``html`` bytes).
+    the ``payload`` column of each batch (OCR mode: stage1→2→3 over the
+    text; HTML/PDF mode: parse+classify over the raw bytes).
 
     Output batches are built as *flat* Arrow arrays (child arrays + offsets
     for the nested blocks/counters columns) — an order of magnitude cheaper
@@ -86,19 +83,13 @@ def _result_batches_arrow(fn, input_col: str):
 
     def gen(batches):
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
 
-        block_struct = pa.struct(
-            [
-                pa.field("block_id", pa.int64()),
-                pa.field("block_type", pa.string()),
-                pa.field("text", pa.string()),
-                pa.field("span_start", pa.int64()),
-                pa.field("span_end", pa.int64()),
-            ]
-        )
+        block_fields = list(to_arrow_type(BLOCK_SCHEMA))
+        names = EXTRACTED_SCHEMA.fieldNames()
 
         for rb in batches:
-            texts = rb.column(rb.schema.get_field_index(input_col)).to_pylist()
+            texts = rb.column(rb.schema.get_field_index("payload")).to_pylist()
 
             status: list[str] = []
             error: list[str | None] = []
@@ -144,7 +135,7 @@ def _result_batches_arrow(fn, input_col: str):
                         pa.array(b_s, pa.int64()),
                         pa.array(b_e, pa.int64()),
                     ],
-                    fields=list(block_struct),
+                    fields=block_fields,
                 ),
             )
             counters_arr = pa.MapArray.from_arrays(
@@ -166,10 +157,7 @@ def _result_batches_arrow(fn, input_col: str):
                     blocks_arr,
                     counters_arr,
                 ],
-                names=[
-                    "url", "warc_ts", "lang", "doc_hash", "status", "error",
-                    "text", "n_chars", "n_blocks", "blocks", "counters",
-                ],
+                names=names,
             )
 
     return gen
@@ -188,42 +176,37 @@ def extract_documents(
     ``bucket(N, url)`` layout and skip this); ``None`` keeps scan
     partitioning (no shuffle).
     """
-    payload = resume_payload_col(docs.columns, text_col)
-    cols = [F.col("url"), F.col("warc_ts"), F.col("lang")]
-    cols.append(doc_hash_column(payload).alias("doc_hash"))
-    cols.append(F.col(text_col).alias("text"))
-    narrowed = docs.select(*cols)
-
-    if salt_partitions:
-        narrowed = narrowed.repartition(salt_partitions, F.xxhash64("url"))
-
     import functools
 
     from pdf_to_epub_spark.extractlib.pipeline import extract_document
 
     fn = functools.partial(extract_document, max_doc_chars=max_doc_chars)
-    return narrowed.mapInArrow(
-        _result_batches_arrow(fn, "text"), EXTRACTED_SCHEMA
-    )
+    hash_col = resume_payload_col(docs.columns, text_col)
+    return _extract_stage(docs, hash_col, text_col, fn, salt_partitions)
 
 
-def _binary_mode_extract(
-    docs, payload_col: str, fn, salt_partitions: int | None
+def _extract_stage(
+    docs: DataFrame,
+    hash_col: str,
+    payload_col: str,
+    fn,
+    salt_partitions: int | None,
 ) -> DataFrame:
-    """Shared narrow-scan → url-hash salt → Arrow-stage shape of the
-    binary-payload extraction modes (HTML, PDF): the payload column rides
-    into Python under the pages-schema slot name ``html``; nothing else
-    leaves the JVM."""
+    """The one plan shape of every extraction mode: narrow scan → optional
+    url-hash salt → one Arrow-batched Python stage running ``fn`` per
+    document.  ``doc_hash`` is ``hash_col`` hashed JVM-side; only
+    ``payload_col`` (as ``payload``) and the pass-through url/warc_ts/lang
+    columns cross into Python, so OCR mode never ships a page's ``html``."""
     narrowed = docs.select(
         F.col("url"),
         F.col("warc_ts"),
         F.col("lang"),
-        doc_hash_column(payload_col).alias("doc_hash"),
-        F.col(payload_col).alias("html"),
+        doc_hash_column(hash_col).alias("doc_hash"),
+        F.col(payload_col).alias("payload"),
     )
     if salt_partitions:
         narrowed = narrowed.repartition(salt_partitions, F.xxhash64("url"))
-    return narrowed.mapInArrow(_result_batches_arrow(fn, "html"), EXTRACTED_SCHEMA)
+    return narrowed.mapInArrow(_result_batches_arrow(fn), EXTRACTED_SCHEMA)
 
 
 def extract_html_documents(
@@ -245,7 +228,7 @@ def extract_html_documents(
     from pdf_to_epub_spark.extractlib.htmlblocks import extract_html_document
 
     fn = functools.partial(extract_html_document, min_words=min_words, mode=mode)
-    return _binary_mode_extract(docs, html_col, fn, salt_partitions)
+    return _extract_stage(docs, html_col, html_col, fn, salt_partitions)
 
 
 def extract_pdf_document(raw, heading_min_size: float = 14.0):
@@ -301,13 +284,12 @@ def extract_pdf_documents(
     reconstruction).  Same plan shape as the OCR/HTML modes: narrow scan →
     optional url-hash salt → ONE Arrow-batched Python stage; the
     reading-order sort happens per document inside the worker, so it adds
-    no shuffle.  The binary payload rides its column name into Python as
-    ``html`` (the pages-schema slot for the raw capture, whatever its
-    container)."""
+    no shuffle.  ``pdf_col`` is both the hashed identity and the payload
+    that crosses into Python."""
     import functools
 
     fn = functools.partial(extract_pdf_document, heading_min_size=heading_min_size)
-    return _binary_mode_extract(docs, pdf_col, fn, salt_partitions)
+    return _extract_stage(docs, pdf_col, pdf_col, fn, salt_partitions)
 
 
 def blocks_table(extracted: DataFrame) -> DataFrame:

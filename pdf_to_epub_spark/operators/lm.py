@@ -16,18 +16,14 @@ the true value within ~1e-9 of a rounding boundary — negligible over a
 <=784-row model.
 
 Scale design (100 TB):
-- Model training is one map-side-combined groupBy over exploded bigrams:
-  partial aggregation collapses each partition to <= 784 rows before the
-  shuffle, so training shuffles O(partitions * 784) slim rows regardless
-  of corpus size.
-- Scoring broadcast-joins the <=784-row model against the exploded bigram
-  stream (narrow), then groupBy(doc_id) — documents are never split
-  across input partitions, so map-side partials collapse to ONE row per
-  doc before the only scoring shuffle.  No text, array, or float rides
-  any shuffle.
-- The exploded bigram view is recomputed for the scoring pass rather than
-  cached: it is a narrow projection of the scan, and at 100 TB a second
-  columnar scan is cheaper than materializing ~text-sized intermediates.
+- Model training is one Arrow pass that emits at most 784 (bigram code,
+  count) rows per batch, then a map-side-combined groupBy and a BOUNDED
+  784-row collect: training shuffles O(batches * 784) slim rows regardless
+  of corpus size, and the driver holds one 784-entry cost vector.
+- Scoring is a narrow ``mapInArrow`` over the scan with ZERO shuffles: the
+  cost vector ships in the closure and each document's score is
+  ``costvec[codes].sum()`` over its numpy bigram codes.  No text, array,
+  or float rides any shuffle.
 - ``train_df`` lets production train on a clean split (the CCNet shape:
   train on Wikipedia, score Common Crawl) — unseen bigrams then fall back
   to the smoothed per-context floor, and unseen contexts to the uniform
@@ -39,83 +35,11 @@ part of the training-data surface this build adds.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ALPHABET_SIZE = 28  # a-z, space, '#'
 _MICRO = 1_000_000.0
-
-
-def _normalized(text_col: str) -> Column:
-    return F.regexp_replace(F.lower(F.col(text_col)), "[^a-z ]", "#")
-
-
-def _bigram_rows(
-    df: DataFrame, id_col: str, text_col: str, keep_empty: bool = False
-) -> DataFrame:
-    """(doc_id, bg) — one row per adjacent character pair, narrow.
-    ``keep_empty`` emits a single null-bg row for docs with <2 normalized
-    chars (explode_outer), so scoring keeps every doc without a join-back.
-
-    ``chars`` is materialized as a real column before the zip_with lambda
-    (multi-referenced columns are not inlined by CollapseProject), so
-    nothing re-evaluates per element — the measured 60x trap documented
-    in PLANS.md.  The slice/zip_with form is O(len) per doc; the naive
-    ``transform(sequence(...), i -> substring(norm, i, 2))`` is O(len^2)
-    byte-walks on UTF8String and is deliberately avoided."""
-    n = F.size(F.col("chars"))
-    bigrams = F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice("chars", 1, n - 1),
-            F.slice(F.col("chars"), 2, n - 1),
-            lambda a, b: F.concat(a, b),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    explode = F.explode_outer if keep_empty else F.explode
-    return (
-        df.select(F.col(id_col).alias("doc_id"), _normalized(text_col).alias("norm"))
-        .withColumn("chars", F.split("norm", ""))
-        .select("doc_id", explode(bigrams).alias("bg"))
-    )
-
-
-def _cost_micro(num: Column, den: Column) -> Column:
-    return F.round(-F.log(num / den) * _MICRO).cast("long")
-
-
-def train_bigram_lm(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
-    """Fit the smoothed bigram model.
-
-    Returns ``(model, floors)``: ``model`` has one row per observed bigram
-    with ``cost_micro = round(-ln((n_bg + 1) / (n_c1 + V)) * 1e6)``;
-    ``floors`` has one row per observed context char with the
-    unseen-bigram cost ``round(-ln(1 / (n_c1 + V)) * 1e6)``.  At most
-    784 + 28 rows — always broadcastable."""
-    # Lazy localCheckpoint: `counts` (<=784 rows) feeds both the model and
-    # the context totals; without it the full-corpus bigram scan runs twice.
-    counts = (
-        _bigram_rows(df, id_col, text_col)
-        .groupBy("bg")
-        .agg(F.count("*").alias("n_bg"))
-        .localCheckpoint(eager=False)
-    )
-    c1_totals = counts.groupBy(F.substring("bg", 1, 1).alias("c1")).agg(
-        F.sum("n_bg").alias("n_c1")
-    )
-    joined = counts.join(
-        c1_totals, F.substring(counts["bg"], 1, 1) == c1_totals["c1"]
-    )
-    v = float(ALPHABET_SIZE)
-    model = joined.select(
-        "bg", _cost_micro(F.col("n_bg") + 1.0, F.col("n_c1") + v).alias("cost_micro")
-    )
-    floors = c1_totals.select(
-        "c1", _cost_micro(F.lit(1.0), F.col("n_c1") + v).alias("floor_cost")
-    )
-    return model, floors
 
 
 def _char_lut():
@@ -131,14 +55,13 @@ def _char_lut():
 
 
 def _train_cost_vector(df: DataFrame, id_col: str, text_col: str):
-    """Arrow-path model fit: global bigram-code counts (one mapInArrow pass
+    """Model fit: global bigram-code counts (one mapInArrow pass
     emitting <=784 slim rows per batch, map-side-combined groupBy, then a
     BOUNDED 784-row collect — same driver-collect budget as the IVF
     centroid sample), turned into the full 784-entry integer micro-nat
     cost table.  Full-table add-one smoothing makes the seen/floor/uniform
     distinction fall out of the same formula: count 0 with a seen context
     gives the floor cost, an unseen context gives -ln(1/V)."""
-    import math
     import re
 
     import numpy as np
@@ -175,7 +98,7 @@ def _train_cost_vector(df: DataFrame, id_col: str, text_col: str):
         counts[r["code"]] = r["n"]
     n_c1 = counts.reshape(28, 28).sum(axis=1)
     # integer micro-nats, half-up (costs are positive) — matches Spark
-    # ROUND HALF_UP and DuckDB round-half-away used by the SQL engine path
+    # ROUND HALF_UP and the DuckDB oracle's round-half-away
     p = (counts + 1.0) / (np.repeat(n_c1, 28) + float(ALPHABET_SIZE))
     return np.floor(-np.log(p) * _MICRO + 0.5).astype(np.int64)
 
@@ -185,7 +108,6 @@ def bigram_lm_scores(
     train_df: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Score every document under the bigram LM.
 
@@ -194,95 +116,53 @@ def bigram_lm_scores(
     perplexity its exp.  Documents shorter than 2 normalized chars score
     ``(0, 0)``.
 
-    ``engine='arrow'`` (default, the scale path) vectorizes both passes in
-    numpy over Arrow batches: training collects a bounded 784-row count
-    table, scoring is ``costvec[codes].sum()`` per doc with ZERO shuffles
-    (the model ships in the closure).  Measured ~10x faster than the
-    column-algebra path, whose interpreted zip_with lambdas dominate.
-    ``engine='sql'`` keeps everything in built-in column algebra — the
-    construction the DuckDB oracle replays term-for-term; tests assert the
-    two engines agree row-for-row.  Unicode note: 'arrow' uses Python
-    full case mapping (same as DuckDB's utf8proc); 'sql' uses the JVM's
-    simple mapping — they can differ on exotic case mappings (e.g.
-    U+0130), never on ASCII/Latin-1 text.
+    Both passes are vectorized in numpy over Arrow batches: training
+    collects a bounded 784-row count table, scoring is
+    ``costvec[codes].sum()`` per doc with ZERO shuffles (the model ships
+    in the closure).  Lowercasing is Python's full case mapping, the same
+    as DuckDB's utf8proc in the entry oracle, which tests run over an
+    edge corpus (empty, one-char, symbol-only and non-ASCII texts).
     """
-    if engine == "arrow":
-        import re
+    import re
 
-        import numpy as np
-        import pyarrow as pa
+    import numpy as np
+    import pyarrow as pa
 
-        costvec = _train_cost_vector(
-            train_df if train_df is not None else df, id_col, text_col
-        )
-        lut = _char_lut()
-
-        def score_batches(it):
-            sub = re.compile("[^a-z ]")
-            for batch in it:
-                ids = batch.column(0)
-                texts = batch.column(1).to_pylist()
-                n_out = np.zeros(len(texts), dtype=np.int64)
-                c_out = np.zeros(len(texts), dtype=np.int64)
-                for j, t in enumerate(texts):
-                    if t is None:
-                        continue
-                    a = lut[
-                        np.frombuffer(
-                            sub.sub("#", t.lower()).encode("ascii"), dtype=np.uint8
-                        )
-                    ]
-                    if len(a) >= 2:
-                        codes = a[:-1] * 28 + a[1:]
-                        n_out[j] = len(codes)
-                        c_out[j] = costvec[codes].sum()
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array(n_out), pa.array(c_out)],
-                    names=["doc_id", "n_bigrams", "cost_micro_total"],
-                )
-
-        id_type = df.select(F.col(id_col)).schema[0].dataType.simpleString()
-        return df.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col)
-        ).mapInArrow(
-            score_batches,
-            f"doc_id {id_type}, n_bigrams long, cost_micro_total long",
-        )
-    if engine != "sql":
-        raise ValueError(f"unknown engine {engine!r}")
-    model, floors = train_bigram_lm(
+    costvec = _train_cost_vector(
         train_df if train_df is not None else df, id_col, text_col
     )
-    # explode_outer keeps a null-bg row for <2-char docs, so every doc
-    # reaches the final aggregate without a distinct+join-back scan.
-    rows = _bigram_rows(df, id_col, text_col, keep_empty=True)
-    uniform = F.round(F.log(F.lit(float(ALPHABET_SIZE))) * _MICRO).cast("long")
-    return (
-        rows.join(
-            F.broadcast(model.withColumnRenamed("bg", "model_bg")),
-            rows["bg"] == F.col("model_bg"),
-            "left",
-        )
-        .join(
-            F.broadcast(floors),
-            F.substring(rows["bg"], 1, 1) == floors["c1"],
-            "left",
-        )
-        .select(
-            "doc_id",
-            "bg",
-            F.when(
-                F.col("bg").isNotNull(),
-                F.coalesce("cost_micro", "floor_cost", uniform),
-            ).alias("cost"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.count("bg").cast("long").alias("n_bigrams"),
-            F.coalesce(F.sum("cost"), F.lit(0))
-            .cast("long")
-            .alias("cost_micro_total"),
-        )
+    lut = _char_lut()
+
+    def score_batches(it):
+        sub = re.compile("[^a-z ]")
+        for batch in it:
+            ids = batch.column(0)
+            texts = batch.column(1).to_pylist()
+            n_out = np.zeros(len(texts), dtype=np.int64)
+            c_out = np.zeros(len(texts), dtype=np.int64)
+            for j, t in enumerate(texts):
+                if t is None:
+                    continue
+                a = lut[
+                    np.frombuffer(
+                        sub.sub("#", t.lower()).encode("ascii"), dtype=np.uint8
+                    )
+                ]
+                if len(a) >= 2:
+                    codes = a[:-1] * 28 + a[1:]
+                    n_out[j] = len(codes)
+                    c_out[j] = costvec[codes].sum()
+            yield pa.RecordBatch.from_arrays(
+                [ids, pa.array(n_out), pa.array(c_out)],
+                names=["doc_id", "n_bigrams", "cost_micro_total"],
+            )
+
+    id_type = df.select(F.col(id_col)).schema[0].dataType.simpleString()
+    return df.select(
+        F.col(id_col).alias("doc_id"), F.col(text_col)
+    ).mapInArrow(
+        score_batches,
+        f"doc_id {id_type}, n_bigrams long, cost_micro_total long",
     )
 
 
@@ -395,7 +275,6 @@ def good_turing(df: DataFrame, text_col: str = "text") -> DataFrame:
 # Interpolated Kneser-Ney word-bigram LM (the KenLM/CCNet model family)
 
 _KN_D_NUM, _KN_D_DEN = 3, 4  # absolute discount D = 3/4, exact rational
-_UNK = "<unk>"  # outside the token char class, cannot collide
 
 
 def _word_pair_rows(

@@ -38,15 +38,6 @@ from pyspark.sql.types import (
 if TYPE_CHECKING:
     import pandas as pd
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("url", StringType()),
-        StructField("media_type", StringType()),  # image | audio | video
-        StructField("payload", StringType()),  # overridden to binary below
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),

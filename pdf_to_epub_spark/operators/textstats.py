@@ -335,50 +335,28 @@ def quality_gate(
     max_words: int = 100_000,
     max_dup_line_char_ratio: float = 0.2,
     max_top_bigram_char_ratio: float = 0.2,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Fused pre-training quality gate: the Gopher rules and the
     repetition filters in one pass, plus the combined ``keep_all`` verdict
     the ingest actually filters on.
 
-    engine='arrow' (the scale default): ZERO shuffles.  The Gopher and
-    duplicate-line signals are the same codegen column algebra as
-    :func:`gopher_quality` / :func:`repetition_signals`; the top-bigram
-    coverage — the one signal whose column form needs explode → groupBy →
-    join-back (two shuffles keyed on the id, plus a text-carrying join in
-    the composed form) — moves into a vectorized Arrow batch that builds
-    each doc's bigram histogram in one linear dict pass.  The whole gate
-    becomes a narrow map over the scan: at 100 TB that is the difference
-    between a filter stage and re-shuffling the corpus between extraction
-    and tokenization.  tests pin arrow == sql on an edge-case corpus
-    (exotic whitespace, split-token quirks, rounding boundaries).
-
-    engine='sql': the composition of the two audited operators — the form
-    the external DuckDB oracle replays term-for-term."""
+    ZERO shuffles.  The Gopher and duplicate-line signals are the same
+    codegen column algebra as :func:`gopher_quality` /
+    :func:`repetition_signals`; the top-bigram coverage — the one signal
+    whose column form needs explode → groupBy → join-back (two shuffles
+    keyed on the id, plus a text-carrying join in the composed form) —
+    moves into a vectorized Arrow batch that builds each doc's bigram
+    histogram in one linear dict pass.  The whole gate becomes a narrow
+    map over the scan: at 100 TB that is the difference between a filter
+    stage and re-shuffling the corpus between extraction and
+    tokenization.  Tests pin it to the ``gopher_quality ⋈
+    repetition_signals`` composition (the form the DuckDB oracle replays)
+    on an edge-case corpus (exotic whitespace, split-token quirks,
+    rounding boundaries)."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     slim = df.select(F.col(id_col), F.col(text_col))
-    keep_all = (
-        F.col("keep")
-        & (F.col("dup_line_char_ratio") < max_dup_line_char_ratio)
-        & (F.col("top_bigram_char_ratio") < max_top_bigram_char_ratio)
-    )
-    out_cols = [
-        F.col(id_col),
-        F.col(text_col),
-        F.col("keep"),
-        F.col("dup_line_ratio"),
-        F.col("dup_line_char_ratio"),
-        F.col("top_bigram_char_ratio"),
-        keep_all.alias("keep_all"),
-    ]
-    if engine == "sql":
-        g = gopher_quality(slim, text_col, min_words, max_words)
-        r = repetition_signals(slim, text_col, id_col)
-        return g.join(r, id_col).select(*out_cols)
-    if engine != "arrow":
-        raise ValueError(f"unknown engine {engine!r}")
 
     # no annotations on the inner fn: PEP-563 stringized hints break
     # pandas_udf signature inference under `from __future__ import annotations`
@@ -401,7 +379,12 @@ def quality_gate(
         dup_line_char_ratio.alias("dup_line_char_ratio"),
         top_bigram(F.col(text_col)).alias("top_bigram_char_ratio"),
     )
-    return scored.select(*out_cols)
+    keep_all = (
+        F.col("keep")
+        & (F.col("dup_line_char_ratio") < max_dup_line_char_ratio)
+        & (F.col("top_bigram_char_ratio") < max_top_bigram_char_ratio)
+    )
+    return scored.withColumn("keep_all", keep_all)
 
 
 def repetition_signals(

@@ -84,14 +84,11 @@ def ingest(
     registrable-domain blocklist the same way."""
     audit: dict[str, DataFrame] = {}
 
-    # argument checks first: the politeness gates below run Spark jobs
     if html_mode and pdf_mode:
         raise ValueError("pick one of html_mode / pdf_mode")
     if robots_txt is not None and not html_mode:
         raise ValueError("robots_txt gating needs html_mode pages")
-    n_raw = None
-    if robots_txt is not None or blocked_domains is not None:
-        n_raw = pages.count()
+    raw_pages = pages
     if blocked_domains is not None:
         from pdf_to_epub_spark.operators import filter_blocked_urls
 
@@ -104,12 +101,12 @@ def ingest(
         )
 
         pages = filter_disallowed(drop_noindex(pages), robots_rules(robots_txt))
-    if n_raw is not None:
-        spark = pages.sparkSession
-        n_gated = pages.count()
-        audit["politeness"] = spark.createDataFrame(
-            [(n_raw, n_gated, n_raw - n_gated)],
-            "n_raw long, n_kept long, n_excluded long",
+    if pages is not raw_pages:
+        n_raw = raw_pages.groupBy().agg(F.count("*").alias("n_raw"))
+        n_kept = pages.groupBy().agg(F.count("*").alias("n_kept"))
+        excluded = (F.col("n_raw") - F.col("n_kept")).alias("n_excluded")
+        audit["politeness"] = n_raw.crossJoin(n_kept).select(
+            "n_raw", "n_kept", excluded
         )
 
     if done_hashes is not None:
@@ -227,7 +224,7 @@ def ingest(
         audit["domain_quota_kept"] = deduped.groupBy().count()
 
     if max_lm_nats_micro is not None:
-        # NB: the arrow LM engine trains its (bounded, 784-row) model with
+        # NB: the LM trains its (bounded, 784-row) model with
         # a collect(), so enabling this gate runs the upstream pipeline
         # EAGERLY inside ingest() — model fitting is an action, not a
         # plan.  Callers that only want the lazy plan should gate LM

@@ -204,7 +204,10 @@ def test_ingest_politeness_gates(spark):
     """robots_txt + blocked_domains wire the crawl-politeness layer in
     front of html-mode extraction: blocklisted domains, noindex pages and
     Disallow'd paths never reach the extractor; the politeness audit row
-    carries the raw/kept/excluded counts."""
+    carries the raw/kept/excluded counts.  Like every audit it is a lazy
+    aggregate: the gates add no job to the ``ingest()`` call itself (the
+    same job count as ingesting the pre-gated pages), and the counts run
+    when the audit is collected."""
     rows = []
     for i, r in enumerate(make_documents(12, seed=31)):
         body = "".join(
@@ -229,11 +232,38 @@ def test_ingest_politeness_gates(spark):
         "domain string, body string",
     )
     blocked = spark.createDataFrame([("site2.example",)], "domain string")
-    result = ingest(
+    from pdf_to_epub_spark.operators import (
+        drop_noindex,
+        filter_blocked_urls,
+        filter_disallowed,
+        robots_rules,
+    )
+
+    sc = spark.sparkContext
+
+    def jobs_started(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            out = run()
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup(None, None)
+
+    result, n_gated = jobs_started("ingest-gated", lambda: ingest(
         pages, html_mode=True, min_words=10,
         robots_txt=robots, blocked_domains=blocked,
+    ))
+    pre_gated = filter_disallowed(
+        drop_noindex(filter_blocked_urls(pages, blocked)), robots_rules(robots)
     )
-    (pol,) = result.audit["politeness"].collect()
+    _, n_plain = jobs_started("ingest-pre-gated", lambda: ingest(
+        pre_gated, html_mode=True, min_words=10,
+    ))
+    assert n_gated == n_plain
+    (pol,), n_audit = jobs_started(
+        "politeness-audit", result.audit["politeness"].collect
+    )
+    assert n_audit > 0
     # blocked domain: i%3==2 (4 docs); then noindex i%4==0 (0,4) and
     # Disallow'd /private/ i%4==1 (1,9) among the rest → 4 survivors
     assert (pol["n_raw"], pol["n_kept"], pol["n_excluded"]) == (12, 4, 8)
@@ -243,8 +273,8 @@ def test_ingest_politeness_gates(spark):
 
 
 def test_ingest_rejects_conflicting_modes_before_any_job(spark):
-    """Argument errors surface before the politeness gates run their
-    counting jobs: pages whose evaluation fails are never evaluated."""
+    """Argument errors surface before any Spark job: pages whose
+    evaluation fails are never evaluated."""
     import pytest
 
     pages = _pages(spark, make_documents(2, seed=5)).where(

@@ -399,3 +399,29 @@ def test_bucketed_layout_extraction_is_shuffle_free(spark, tmp_path):
 
     assert not plan_has_exchange(extract_documents(docs, salt_partitions=None))
     assert plan_has_exchange(extract_documents(docs, salt_partitions=8))
+
+
+def test_extraction_modes_share_one_narrow_stage(docs_df):
+    """Every extraction mode is the scan feeding one MapInArrow, with no
+    Exchange when unsalted.  OCR mode over pages that carry ``html``
+    hashes the page JVM-side: only the (string) text crosses into Python,
+    while the HTML and PDF modes ship the binary page."""
+    from pdf_to_epub_spark.operators import (
+        extract_html_documents,
+        extract_pdf_documents,
+    )
+
+    modes = {
+        extract_documents: "string",
+        extract_html_documents: "binary",
+        extract_pdf_documents: "binary",
+    }
+    for extract, payload_type in modes.items():
+        plan = extract(docs_df)._jdf.queryExecution().executedPlan()  # noqa: SLF001
+        nodes = [n for n, _ in _plan_paths(plan)]
+        assert not [n for n in nodes if "Exchange" in n.nodeName()], plan.toString()
+        (stage,) = [n for n in nodes if n.nodeName().endswith("MapInArrow")]
+        out = stage.child().output()
+        inputs = [out.apply(i).name() for i in range(out.size())]
+        assert inputs == ["url", "warc_ts", "lang", "doc_hash", "payload"], inputs
+        assert out.apply(4).dataType().typeName() == payload_type

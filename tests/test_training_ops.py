@@ -780,13 +780,25 @@ class TestBigramLM:
         assert out[0]["n_docs"] == 3
 
     def test_arrow_and_sql_engines_agree(self, spark):
+        """The Arrow scorer matches the entry contract's DuckDB oracle SQL
+        row-for-row on the edge rows (non-ASCII, one-char, empty,
+        symbol-only)."""
+        import duckdb
+        import pandas as pd
+
+        import __spark_entry__ as entrymod
         from pdf_to_epub_spark.operators import bigram_lm_scores
 
         rows = [(i, (BASE + f" Zörk-{i}! ") * 3) for i in range(15)]
         rows += [(100, "x"), (101, ""), (102, "???! 42")]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        a = sorted(map(tuple, bigram_lm_scores(df, engine="arrow").collect()))
-        s = sorted(map(tuple, bigram_lm_scores(df, engine="sql").collect()))
+        a = sorted(map(tuple, bigram_lm_scores(df).collect()))
+        con = duckdb.connect()
+        try:
+            con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+            s = sorted(con.execute(entrymod.oracle_sql()["bigram_lm_scores"]).fetchall())
+        finally:
+            con.close()
         assert a == s
 
 
@@ -951,7 +963,7 @@ class TestNewOpPlans:
         df = spark.createDataFrame(
             [(i, BASE) for i in range(10)], "doc_id long, text string"
         )
-        scores = bigram_lm_scores(df, train_df=df.limit(5), engine="arrow")
+        scores = bigram_lm_scores(df, train_df=df.limit(5))
         plan = scores._jdf.queryExecution().executedPlan().toString()
         # the model ships in the closure; scoring is scan -> mapInArrow
         assert "Exchange" not in plan, plan[:2000]
@@ -983,11 +995,15 @@ class TestNewOpPlans:
 
 
 def test_quality_gate_arrow_matches_sql_and_is_shuffle_free(spark):
-    """The fused gate's arrow engine (per-row bigram histogram, zero
-    shuffles) must be value-identical to the sql engine (the audited
-    gopher ⋈ repetition composition) on the whitespace/tokenization edge
-    corpus, and its physical plan must contain no Exchange."""
-    from pdf_to_epub_spark.operators import quality_gate
+    """The fused gate (per-row Arrow bigram histogram, zero shuffles) must
+    be value-identical to the audited gopher ⋈ repetition composition on
+    the whitespace/tokenization edge corpus, and its physical plan must
+    contain no Exchange."""
+    from pdf_to_epub_spark.operators import (
+        gopher_quality,
+        quality_gate,
+        repetition_signals,
+    )
 
     docs = [
         "",
@@ -1009,9 +1025,18 @@ def test_quality_gate_arrow_matches_sql_and_is_shuffle_free(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(docs)], "doc_id long, text string"
     )
-    kw = dict(id_col="doc_id", min_words=2, max_words=50)
-    a = quality_gate(df, engine="arrow", **kw)
-    s = quality_gate(df, engine="sql", **kw)
+    a = quality_gate(df, id_col="doc_id", min_words=2, max_words=50)
+    s = gopher_quality(df, min_words=2, max_words=50).join(
+        repetition_signals(df, id_col="doc_id"), "doc_id"
+    ).select(
+        "doc_id", "text", "keep", "dup_line_ratio", "dup_line_char_ratio",
+        "top_bigram_char_ratio",
+        (
+            F.col("keep")
+            & (F.col("dup_line_char_ratio") < 0.2)
+            & (F.col("top_bigram_char_ratio") < 0.2)
+        ).alias("keep_all"),
+    )
     a_rows = sorted(map(tuple, a.collect()))
     s_rows = sorted(map(tuple, s.collect()))
     assert a_rows == s_rows
