@@ -24,13 +24,11 @@ Spark-first design notes (what holds at 100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     IntegerType,
     LongType,
     MapType,
@@ -40,10 +38,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .resume import doc_hash_column, resume_payload_col
+from pdf_to_epub_spark.sources._arrow import map_rows
 
-if TYPE_CHECKING:
-    import pandas as pd
+from .resume import doc_hash_column, resume_payload_col
 
 BLOCK_SCHEMA = StructType(
     [
@@ -309,8 +306,14 @@ def blocks_table(extracted: DataFrame) -> DataFrame:
     )
 
 
-IMAGE_REFS_SCHEMA = (
-    "url string, seq int, src string, alt string, boilerplate boolean"
+IMAGE_REFS_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("seq", IntegerType()),
+        StructField("src", StringType()),
+        StructField("alt", StringType()),
+        StructField("boilerplate", BooleanType()),
+    ]
 )
 
 
@@ -332,47 +335,20 @@ def extract_image_refs(
     unparseable page contributes zero manifest rows instead of killing
     the task — a manifest has no status column to quarantine into, and
     one bad crawl row must never fail the job."""
-    import pandas as pd
-
     from pdf_to_epub_spark.extractlib.htmlblocks import parse_image_refs
 
     max_page_bytes = 50_000_000
-    narrowed = pages.select(
-        F.col(url_col).alias("url"), F.col(html_col).alias("html")
-    )
 
-    def gen(batches):
-        for pdf in batches:
-            urls: list = []
-            seqs: list = []
-            srcs: list = []
-            alts: list = []
-            bps: list = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                if html is None or len(html) > max_page_bytes:
-                    continue
-                try:
-                    refs = parse_image_refs(html)
-                except Exception:
-                    continue
-                for r in refs:
-                    urls.append(url)
-                    seqs.append(r.seq)
-                    srcs.append(r.src)
-                    alts.append(r.alt)
-                    bps.append(r.boilerplate)
-            if urls:
-                yield pd.DataFrame(
-                    {
-                        "url": pd.Series(urls, dtype="object"),
-                        "seq": pd.Series(seqs, dtype="int32"),
-                        "src": pd.Series(srcs, dtype="object"),
-                        "alt": pd.Series(alts, dtype="object"),
-                        "boilerplate": pd.Series(bps, dtype="bool"),
-                    }
-                )
+    def refs(url, html):
+        if html is None or len(html) > max_page_bytes:
+            return ()
+        try:
+            found = parse_image_refs(html)
+        except Exception:
+            return ()
+        return [(url, r.seq, r.src, r.alt, r.boilerplate) for r in found]
 
-    return narrowed.mapInPandas(gen, IMAGE_REFS_SCHEMA)
+    return map_rows(pages, [url_col, html_col], IMAGE_REFS_SCHEMA, refs)
 
 
 def image_caption_pairs(

@@ -21,6 +21,14 @@ conjunction of the per-stage oracles plus the composition test
 ``audit`` dict of small aggregate DataFrames — a driver materializes them
 AFTER the run (they are cheap aggregates over checkpointed stages, not
 extra full passes).
+
+Building the plan is not free: ``ingest()`` starts Spark jobs when it is
+called, before any action on its result.  A ``localCheckpoint(eager=False)``
+over a plan with exchanges builds its RDD through AQE's final-plan step,
+which executes every query stage under it.  Two such barriers run at
+call time: the one in ``dedup._verify_pairs_exact_jaccard`` (under
+``drop_near_duplicates``) and ingest's own ``deduped`` barrier.  With
+``max_lm_nats_micro`` set, the LM gate also collects its model then.
 """
 
 from __future__ import annotations
@@ -81,7 +89,13 @@ def ingest(
     filtering (broadcast) and the robots-meta noindex gate —
     publisher-declared exclusions never reach the extractor.
     ``blocked_domains`` (any mode; ``(domain)``) applies the UT1-shape
-    registrable-domain blocklist the same way."""
+    registrable-domain blocklist the same way.
+
+    The call itself runs Spark jobs: the near-dup verification barrier
+    and the ``deduped`` barrier execute their shuffle stages here, and
+    ``max_lm_nats_micro`` collects the LM model here (see the module
+    docstring).  The rest of the work runs when an action reads the
+    returned corpus or audit frames."""
     audit: dict[str, DataFrame] = {}
 
     if html_mode and pdf_mode:

@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_to_epub_spark.sources._arrow import isolated, map_rows
+
 W_NS = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
 
 
@@ -244,55 +246,17 @@ def parse_docx_payloads(
     yields at least one row (``status='unsupported'`` / ``'error'`` /
     ``'empty'`` markers — error isolation, never a task failure and never
     a silently vanished document; same contract as sources/pdf.py)."""
-    import pyarrow as pa
 
-    def batches(it):
-        for b in it:
-            ids, seqs, types, texts, statuses = [], [], [], [], []
+    def blocks(doc_id, raw):
+        for seq, (style, text) in enumerate(extract_docx_blocks(raw), 1):
+            kind = "heading" if style.startswith("Heading") else "para"
+            yield doc_id, seq, kind, text, "ok"
 
-            def marker(doc_id, status):
-                ids.append(doc_id)
-                seqs.append(None)
-                types.append(None)
-                texts.append(None)
-                statuses.append(status)
-
-            for doc_id, payload in zip(
-                b.column(0).to_pylist(), b.column(1).to_pylist()
-            ):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    blocks = extract_docx_blocks(raw)
-                except UnsupportedDocx:
-                    marker(doc_id, "unsupported")
-                    continue
-                except Exception:  # noqa: BLE001 — isolate, don't kill the task
-                    marker(doc_id, "error")
-                    continue
-                if not blocks:
-                    marker(doc_id, "empty")
-                    continue
-                for seq, (style, text) in enumerate(blocks):
-                    ids.append(doc_id)
-                    seqs.append(seq + 1)
-                    types.append(
-                        "heading" if style.startswith("Heading") else "para"
-                    )
-                    texts.append(text)
-                    statuses.append("ok")
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(seqs, pa.int32()),
-                    pa.array(types, pa.string()),
-                    pa.array(texts, pa.string()),
-                    pa.array(statuses, pa.string()),
-                ],
-                names=[f.name for f in DOCX_BLOCK_SCHEMA.fields],
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInArrow(
-        batches, DOCX_BLOCK_SCHEMA
+    return map_rows(
+        df,
+        [id_col, payload_col],
+        DOCX_BLOCK_SCHEMA,
+        isolated(blocks, UnsupportedDocx, "empty", DOCX_BLOCK_SCHEMA),
     )
 
 

@@ -27,7 +27,6 @@ import xml.etree.ElementTree as ET
 import zipfile
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -35,6 +34,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pdf_to_epub_spark.sources._arrow import isolated, map_rows
 
 _NS_CONTAINER = {"c": "urn:oasis:names:tc:opendocument:xmlns:container"}
 _NS_OPF = {
@@ -178,63 +179,23 @@ def parse_epub_payloads(
     silently vanished document.
 
     The id column passes through under its own name and type (url
-    strings work as well as long ids) — the Arrow id array is built
-    with the INPUT batch's type, never a hard-coded int64."""
-    import pyarrow as pa
-
+    strings work as well as long ids): the output schema's id field is
+    the input's, and every output column is typed from that schema."""
     id_field = df.select(id_col).schema.fields[0]
     out_schema = StructType(
         [StructField(id_field.name, id_field.dataType)]
-        + [f for f in EPUB_CHAPTER_SCHEMA.fields[1:]]
+        + EPUB_CHAPTER_SCHEMA.fields[1:]
     )
 
-    def batches(it):
-        for b in it:
-            ids, idxs, heads, texts, nps, statuses = [], [], [], [], [], []
+    def chapters(doc_id, raw):
+        for ch in parse_epub_bytes(raw)["chapters"]:
+            paras = ch["paras"]
+            text = "\n".join(paras)
+            yield doc_id, ch["idx"], ch["heading"], text, len(paras), "ok"
 
-            def marker(doc_id, status):
-                ids.append(doc_id)
-                idxs.append(None)
-                heads.append(None)
-                texts.append(None)
-                nps.append(None)
-                statuses.append(status)
-
-            for doc_id, payload in zip(
-                b.column(0).to_pylist(), b.column(1).to_pylist()
-            ):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    doc = parse_epub_bytes(raw)
-                except UnsupportedEpub:
-                    marker(doc_id, "unsupported")
-                    continue
-                except Exception:  # noqa: BLE001 — isolate, don't kill the task
-                    marker(doc_id, "error")
-                    continue
-                if not doc["chapters"]:
-                    marker(doc_id, "empty")
-                    continue
-                for ch in doc["chapters"]:
-                    ids.append(doc_id)
-                    idxs.append(ch["idx"])
-                    heads.append(ch["heading"])
-                    texts.append("\n".join(ch["paras"]))
-                    nps.append(len(ch["paras"]))
-                    statuses.append("ok")
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, b.column(0).type),
-                    pa.array(idxs, pa.int32()),
-                    pa.array(heads, pa.string()),
-                    pa.array(texts, pa.string()),
-                    pa.array(nps, pa.int32()),
-                    pa.array(statuses, pa.string()),
-                ],
-                names=[id_field.name]
-                + [f.name for f in EPUB_CHAPTER_SCHEMA.fields[1:]],
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInArrow(
-        batches, out_schema
+    return map_rows(
+        df,
+        [id_col, payload_col],
+        out_schema,
+        isolated(chapters, UnsupportedEpub, "empty", out_schema),
     )

@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_to_epub_spark.sources._arrow import map_rows
+
 MSG_TOKENS = 50    # tokens per message
 LINE_TOKENS = 10   # tokens per body line
 
@@ -177,33 +179,9 @@ def parse_mbox_payloads(
     """``(id, mbox: string)`` → one row per message in archive order:
     ``(doc_id, msg_id, subject, n_quoted, body)``; Arrow-batched,
     narrow (no shuffle); ``msg_id`` numbers from 1."""
-    import pyarrow as pa
 
-    def batches(it):
-        for b in it:
-            ids, seqs, subs, quos, bodies = [], [], [], [], []
-            for doc_id, raw in zip(
-                b.column(0).to_pylist(), b.column(1).to_pylist()
-            ):
-                for seq, (subject, n_quoted, body) in enumerate(
-                    parse_mbox(raw or "")
-                ):
-                    ids.append(doc_id)
-                    seqs.append(seq + 1)
-                    subs.append(subject)
-                    quos.append(n_quoted)
-                    bodies.append(body)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(seqs, pa.int32()),
-                    pa.array(subs, pa.string()),
-                    pa.array(quos, pa.int32()),
-                    pa.array(bodies, pa.string()),
-                ],
-                names=[f.name for f in MBOX_MSG_SCHEMA.fields],
-            )
+    def messages(doc_id, raw):
+        for seq, msg in enumerate(parse_mbox(raw or ""), 1):
+            yield doc_id, seq, *msg
 
-    return df.select(F.col(id_col), F.col(mbox_col)).mapInArrow(
-        batches, MBOX_MSG_SCHEMA
-    )
+    return map_rows(df, [id_col, mbox_col], MBOX_MSG_SCHEMA, messages)

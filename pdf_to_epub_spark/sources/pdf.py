@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_to_epub_spark.sources._arrow import isolated, map_rows
+
 
 class UnsupportedPdf(Exception):
     """Raised for PDFs this parser cannot genuinely handle (encrypted,
@@ -537,65 +539,18 @@ def parse_pdf_payloads(
     least one row: undecodable payloads a ``status='unsupported'`` row,
     decode crashes a ``status='error'`` row, and a valid but textless PDF
     (blank pages) a ``status='empty'`` row — error isolation, never a
-    task failure and never a silently vanished document (same contract as
-    operators/multimodal.py)."""
-    import pyarrow as pa
+    task failure and never a silently vanished document (the contract
+    every container parser shares through ``sources/_arrow.isolated``)."""
 
-    def batches(it):
-        for b in it:
-            ids, seqs, pages = [], [], []
-            xs, ys, sizes, texts, statuses = [], [], [], [], []
+    def blocks(doc_id, raw):
+        for seq, block in enumerate(extract_pdf_blocks(raw)):
+            yield doc_id, seq, *block, "ok"
 
-            def marker(doc_id, status):
-                ids.append(doc_id)
-                seqs.append(None)
-                pages.append(None)
-                xs.append(None)
-                ys.append(None)
-                sizes.append(None)
-                texts.append(None)
-                statuses.append(status)
-
-            for doc_id, payload in zip(
-                b.column(0).to_pylist(), b.column(1).to_pylist()
-            ):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    blocks = extract_pdf_blocks(raw)
-                except UnsupportedPdf:
-                    marker(doc_id, "unsupported")
-                    continue
-                except Exception:  # noqa: BLE001 — isolate, don't kill the task
-                    marker(doc_id, "error")
-                    continue
-                if not blocks:
-                    marker(doc_id, "empty")
-                    continue
-                for seq, (page, x, y, size, text) in enumerate(blocks):
-                    ids.append(doc_id)
-                    seqs.append(seq)
-                    pages.append(page)
-                    xs.append(x)
-                    ys.append(y)
-                    sizes.append(size)
-                    texts.append(text)
-                    statuses.append("ok")
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(seqs, pa.int32()),
-                    pa.array(pages, pa.int32()),
-                    pa.array(xs, pa.float64()),
-                    pa.array(ys, pa.float64()),
-                    pa.array(sizes, pa.float64()),
-                    pa.array(texts, pa.string()),
-                    pa.array(statuses, pa.string()),
-                ],
-                names=[f.name for f in PDF_BLOCK_SCHEMA.fields],
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInArrow(
-        batches, PDF_BLOCK_SCHEMA
+    return map_rows(
+        df,
+        [id_col, payload_col],
+        PDF_BLOCK_SCHEMA,
+        isolated(blocks, UnsupportedPdf, "empty", PDF_BLOCK_SCHEMA),
     )
 
 
@@ -810,56 +765,16 @@ def parse_pdf_outlines(
     undecodable payloads yield a ``status='unsupported'`` marker row,
     crashes ``'error'``, an outline-less file ``'none'`` — every input
     doc is accounted for."""
-    import pyarrow as pa
 
-    def batches(it):
-        for b in it:
-            ids, seqs, levels, titles, pgs, statuses = [], [], [], [], [], []
+    def entries(doc_id, raw):
+        for seq, entry in enumerate(extract_pdf_outline(raw)):
+            yield doc_id, seq, *entry, "ok"
 
-            def marker(doc_id, status):
-                ids.append(doc_id)
-                seqs.append(None)
-                levels.append(None)
-                titles.append(None)
-                pgs.append(None)
-                statuses.append(status)
-
-            for doc_id, payload in zip(
-                b.column(0).to_pylist(), b.column(1).to_pylist()
-            ):
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    entries = extract_pdf_outline(raw)
-                except UnsupportedPdf:
-                    marker(doc_id, "unsupported")
-                    continue
-                except Exception:  # noqa: BLE001 — isolate, don't kill the task
-                    marker(doc_id, "error")
-                    continue
-                if not entries:
-                    marker(doc_id, "none")
-                    continue
-                for seq, (level, title, page) in enumerate(entries):
-                    ids.append(doc_id)
-                    seqs.append(seq)
-                    levels.append(level)
-                    titles.append(title)
-                    pgs.append(page)
-                    statuses.append("ok")
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(seqs, pa.int32()),
-                    pa.array(levels, pa.int32()),
-                    pa.array(titles, pa.string()),
-                    pa.array(pgs, pa.int32()),
-                    pa.array(statuses, pa.string()),
-                ],
-                names=[f.name for f in PDF_OUTLINE_SCHEMA.fields],
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInArrow(
-        batches, PDF_OUTLINE_SCHEMA
+    return map_rows(
+        df,
+        [id_col, payload_col],
+        PDF_OUTLINE_SCHEMA,
+        isolated(entries, UnsupportedPdf, "none", PDF_OUTLINE_SCHEMA),
     )
 
 

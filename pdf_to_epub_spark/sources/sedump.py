@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_to_epub_spark.sources._arrow import map_rows
+
 POST_TOKENS = 40   # tokens per post (question or answer)
 LINE_TOKENS = 8    # tokens per body line
 
@@ -207,35 +209,12 @@ def parse_sedump_payloads(
 ) -> DataFrame:
     """``(id, xml: string)`` → one row per post in dump order; Arrow-
     batched, narrow (no shuffle)."""
-    import pyarrow as pa
 
-    def batches(it):
-        for b in it:
-            cols: list[list] = [[] for _ in range(8)]
-            for doc_id, raw in zip(
-                b.column(0).to_pylist(), b.column(1).to_pylist()
-            ):
-                for row in parse_sedump(raw or ""):
-                    cols[0].append(doc_id)
-                    for j, v in enumerate(row):
-                        cols[j + 1].append(v)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols[0], pa.int64()),
-                    pa.array(cols[1], pa.int32()),
-                    pa.array(cols[2], pa.int32()),
-                    pa.array(cols[3], pa.int32()),
-                    pa.array(cols[4], pa.int32()),
-                    pa.array(cols[5], pa.int32()),
-                    pa.array(cols[6], pa.string()),
-                    pa.array(cols[7], pa.string()),
-                ],
-                names=[f.name for f in SEDUMP_POST_SCHEMA.fields],
-            )
+    def posts(doc_id, raw):
+        for post in parse_sedump(raw or ""):
+            yield doc_id, *post
 
-    return df.select(F.col(id_col), F.col(xml_col)).mapInArrow(
-        batches, SEDUMP_POST_SCHEMA
-    )
+    return map_rows(df, [id_col, xml_col], SEDUMP_POST_SCHEMA, posts)
 
 
 def qa_best_answer_pairs(posts: DataFrame) -> DataFrame:

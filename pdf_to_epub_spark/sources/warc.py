@@ -33,9 +33,17 @@ from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
-RECORD_SCHEMA = (
-    "url string, warc_date string, record_type string, html binary"
+from pdf_to_epub_spark.sources._arrow import map_rows, record_batch
+
+RECORD_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("warc_date", StringType()),
+        StructField("record_type", StringType()),
+        StructField("html", BinaryType()),
+    ]
 )
 
 _GZIP_MAGIC = b"\x1f\x8b"
@@ -296,47 +304,26 @@ def parse_warc_contents(
 ) -> DataFrame:
     """One page row per record from ``(content: binary)`` WARC-file rows —
     an Arrow-batched narrow pass, no shuffle."""
-    import pyarrow as pa
 
-    def batches(it):
-        for b in it:
-            urls, dates, types, bodies = [], [], [], []
-            for content in b.column(0).to_pylist():
-                if content is None:
-                    continue
-                for url, date, rtype, body in iter_warc_records(content):
-                    urls.append(url)
-                    dates.append(date)
-                    types.append(rtype)
-                    bodies.append(body)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, pa.string()),
-                    pa.array(dates, pa.string()),
-                    pa.array(types, pa.string()),
-                    pa.array(bodies, pa.binary()),
-                ],
-                names=["url", "warc_date", "record_type", "html"],
-            )
+    def records(content):
+        return iter_warc_records(content) if content is not None else ()
 
-    return df.select(F.col(content_col)).mapInArrow(batches, RECORD_SCHEMA)
+    return map_rows(df, [content_col], RECORD_SCHEMA, records)
 
 
-def _record_batch(urls, dates, types, bodies):
-    """One Arrow RecordBatch in RECORD_SCHEMA order — the single batch
-    builder every reader shares (read_warc_paths, the DataSource), so a
-    schema change has exactly one place to land."""
-    import pyarrow as pa
-
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(urls, pa.string()),
-            pa.array(dates, pa.string()),
-            pa.array(types, pa.string()),
-            pa.array(bodies, pa.binary()),
-        ],
-        names=["url", "warc_date", "record_type", "html"],
-    )
+def _file_batches(path: str, records_per_batch: int):
+    """Stream one archive as RECORD_SCHEMA batches of at most
+    ``records_per_batch`` rows — the loop both path readers share
+    (read_warc_paths, the DataSource)."""
+    rows = []
+    with open(path, "rb") as f:
+        for rec in stream_warc_records(f):
+            rows.append(rec)
+            if len(rows) >= records_per_batch:
+                yield record_batch(rows, RECORD_SCHEMA)
+                rows = []
+    if rows:
+        yield record_batch(rows, RECORD_SCHEMA)
 
 
 def read_warc_paths(
@@ -353,18 +340,7 @@ def read_warc_paths(
     def batches(it):
         for b in it:
             for path in b.column(0).to_pylist():
-                urls, dates, types, bodies = [], [], [], []
-                with open(path, "rb") as f:
-                    for url, date, rtype, body in stream_warc_records(f):
-                        urls.append(url)
-                        dates.append(date)
-                        types.append(rtype)
-                        bodies.append(body)
-                        if len(urls) >= records_per_batch:
-                            yield _record_batch(urls, dates, types, bodies)
-                            urls, dates, types, bodies = [], [], [], []
-                if urls:
-                    yield _record_batch(urls, dates, types, bodies)
+                yield from _file_batches(path, records_per_batch)
 
     return paths_df.select(F.col(path_col)).mapInArrow(batches, RECORD_SCHEMA)
 
@@ -757,18 +733,7 @@ class _WarcReader(DataSourceReader):
         return [InputPartition(p) for p in paths]
 
     def read(self, partition):
-        urls, dates, types, bodies = [], [], [], []
-        with open(partition.value, "rb") as f:
-            for url, date, rtype, body in stream_warc_records(f):
-                urls.append(url)
-                dates.append(date)
-                types.append(rtype)
-                bodies.append(body)
-                if len(urls) >= self._batch:
-                    yield _record_batch(urls, dates, types, bodies)
-                    urls, dates, types, bodies = [], [], [], []
-        if urls:
-            yield _record_batch(urls, dates, types, bodies)
+        yield from _file_batches(partition.value, self._batch)
 
 
 def register_warc_source(spark: SparkSession) -> None:

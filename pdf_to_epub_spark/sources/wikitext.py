@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_to_epub_spark.sources._arrow import map_rows
+
 PARA_TOKENS = 30      # tokens per paragraph chunk
 HEADING_EVERY = 5     # a heading opens every 5th chunk
 TEMPLATE_EVERY = 3    # every 3rd chunk ends with a {{cite}} template
@@ -193,45 +195,17 @@ def documents_as_wikitext(
     )
 
 
-def _map_parsed(df: DataFrame, wiki_col: str, id_col: str, want_links: bool):
-    import pyarrow as pa
-
-    schema = WIKI_LINK_SCHEMA if want_links else WIKI_BLOCK_SCHEMA
-
-    def batches(it):
-        for b in it:
-            ids, seqs, c3, c4 = [], [], [], []
-            for doc_id, raw in zip(
-                b.column(0).to_pylist(), b.column(1).to_pylist()
-            ):
-                blocks, links = parse_wikitext(raw or "")
-                rows = links if want_links else blocks
-                for seq, (a, bb) in enumerate(rows):
-                    ids.append(doc_id)
-                    seqs.append(seq + 1)
-                    c3.append(a)
-                    c4.append(bb)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(seqs, pa.int32()),
-                    pa.array(c3, pa.string()),
-                    pa.array(c4, pa.string()),
-                ],
-                names=[f.name for f in schema.fields],
-            )
-
-    return df.select(F.col(id_col), F.col(wiki_col)).mapInArrow(
-        batches, schema
-    )
-
-
 def parse_wikitext_payloads(
     df: DataFrame, wiki_col: str = "wiki", id_col: str = "doc_id"
 ) -> DataFrame:
     """``(id, wiki: string)`` → one row per block in document order:
     ``(doc_id, block_id, block_type, text)``; Arrow-batched, narrow."""
-    return _map_parsed(df, wiki_col, id_col, want_links=False)
+
+    def blocks(doc_id, raw):
+        for seq, block in enumerate(parse_wikitext(raw or "")[0], 1):
+            yield doc_id, seq, *block
+
+    return map_rows(df, [id_col, wiki_col], WIKI_BLOCK_SCHEMA, blocks)
 
 
 def extract_wikitext_links(
@@ -240,4 +214,9 @@ def extract_wikitext_links(
     """``(id, wiki: string)`` → the link table ``(doc_id, link_id,
     target, anchor)`` in document order; Arrow-batched, narrow — the
     wiki-graph edge list a link-analysis stage consumes."""
-    return _map_parsed(df, wiki_col, id_col, want_links=True)
+
+    def links(doc_id, raw):
+        for seq, link in enumerate(parse_wikitext(raw or "")[1], 1):
+            yield doc_id, seq, *link
+
+    return map_rows(df, [id_col, wiki_col], WIKI_LINK_SCHEMA, links)
