@@ -268,6 +268,29 @@ def _bucket_pairs(buckets: DataFrame, max_bucket: int = 4096) -> DataFrame:
     return buckets.select(F.explode(chosen).alias("p")).select("p.id_a", "p.id_b")
 
 
+def _band_keys(num_hashes: int, bands: int) -> Column:
+    """``array<struct<band_id, band_hash>>`` of the ``sig`` column: band
+    ``b`` is the xxhash64 of signature slots ``b·r+1 … b·r+r``
+    (``r = num_hashes // bands``), so equal keys mean an equal band."""
+    rows_per_band = num_hashes // bands
+    band_hash = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            F.xxhash64(
+                F.concat_ws(
+                    ":",
+                    *[
+                        F.element_at("sig", b * rows_per_band + r + 1)
+                        for r in range(rows_per_band)
+                    ],
+                )
+            ).alias("band_hash"),
+        )
+        for b in range(bands)
+    ]
+    return F.array(*band_hash)
+
+
 def _lsh_band_pairs_touching(
     sigs: DataFrame,
     new_ids: DataFrame,
@@ -285,22 +308,6 @@ def _lsh_band_pairs_touching(
     combination first just to discard it.)  Over-``max_bucket`` buckets
     degrade to the same star shape as :func:`_bucket_pairs`, restricted
     to star pairs touching a new id."""
-    rows_per_band = num_hashes // bands
-    band_hash = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.xxhash64(
-                F.concat_ws(
-                    ":",
-                    *[
-                        F.element_at("sig", b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
-                )
-            ).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
     flagged = sigs.join(
         F.broadcast(
             new_ids.select(F.col(id_col)).withColumn("_new", F.lit(True))
@@ -311,7 +318,7 @@ def _lsh_band_pairs_touching(
     banded = flagged.select(
         F.col(id_col),
         F.coalesce("_new", F.lit(False)).alias("_new"),
-        F.explode(F.array(*band_hash)).alias("band"),
+        F.explode(_band_keys(num_hashes, bands)).alias("band"),
     ).select(id_col, "_new", "band.band_id", "band.band_hash")
 
     buckets = (
@@ -372,24 +379,8 @@ def lsh_bucket_stats(
     — and aggregated with ONE groupBy, so the audit costs what one banding
     pass costs (the previous per-band groupBy loop + unionByName rescanned
     the signature table ``bands`` times, which nobody would run at 100 TB)."""
-    rows_per_band = num_hashes // bands
-    band_hash = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.xxhash64(
-                F.concat_ws(
-                    ":",
-                    *[
-                        F.element_at("sig", b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
-                )
-            ).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
     sizes = (
-        sigs.select(F.explode(F.array(*band_hash)).alias("band"))
+        sigs.select(F.explode(_band_keys(num_hashes, bands)).alias("band"))
         .groupBy("band.band_id", "band.band_hash")
         .agg(F.count("*").alias("n"))
     )
@@ -536,24 +527,8 @@ def _lsh_band_pairs(
     ``(id_a, id_b)`` pairs via banded LSH buckets.  Slim band rows —
     signature arrays do NOT ride through the ×bands explode or the bucket
     shuffle (they'd be duplicated ``bands`` times)."""
-    rows_per_band = num_hashes // bands
-    band_hash = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.xxhash64(
-                F.concat_ws(
-                    ":",
-                    *[
-                        F.element_at("sig", b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
-                )
-            ).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
     banded = sigs.select(
-        F.col(id_col), F.explode(F.array(*band_hash)).alias("band")
+        F.col(id_col), F.explode(_band_keys(num_hashes, bands)).alias("band")
     ).select(id_col, "band.band_id", "band.band_hash")
 
     buckets = (
@@ -900,7 +875,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.8,
     max_df: int | None = DEFAULT_SHINGLE_MAX_DF,
-    probe: bool = True,
 ) -> DataFrame:
     """Exact n-gram-Jaccard pairing via a PPJoin-style PREFIX-FILTERED
     inverted index over HASHED shingles, with exact set verification:
@@ -936,12 +910,13 @@ def ngram_jaccard_pairs(
        collision bound, the same order as the candidate stage's 2⁻⁶⁴
        xxhash64 bound this operator has always carried.
 
-    ``probe=False`` keeps construction FULLY LAZY: the bounded
-    default-cap no-op probe (`_cap_is_provably_noop`, a
-    limit(max_df+1).count() driver action) is skipped and the capped
-    plan is built as-is — for pipelines composing many operators that
-    should not pay one hidden job each (r5 advice)."""
-    if probe and _cap_is_provably_noop(df, max_df):
+    Left at its default, ``max_df`` costs one bounded driver job at
+    construction (`_cap_is_provably_noop`, a limit(max_df+1).count()
+    probe) that drops the cap when it cannot trip.  Any explicitly
+    passed cap — ``max_df=10_000`` included — skips the probe and keeps
+    construction FULLY LAZY, for pipelines composing many operators
+    that should not pay one hidden job each."""
+    if _cap_is_provably_noop(df, max_df):
         max_df = None
     sh = with_shingles(df.select(id_col, text_col), text_col, k).select(
         F.col(id_col).alias("id"), F.col("shingles")
@@ -1014,7 +989,6 @@ def containment_pairs(
     k: int = 5,
     threshold: float = 0.8,
     max_df: int | None = DEFAULT_SHINGLE_MAX_DF,
-    probe: bool = True,
 ) -> DataFrame:
     """Exact ASYMMETRIC shingle-containment pairing — the
     syndication/excerpt detector Jaccard structurally misses: when A is an
@@ -1061,9 +1035,9 @@ def containment_pairs(
     many shingles the cap would drop (the cap engages silently inside
     the executors and cannot log — the `lsh_bucket_stats` precedent).
 
-    ``probe=False`` keeps construction FULLY LAZY (skips the bounded
-    default-cap no-op probe) — see `ngram_jaccard_pairs`."""
-    if probe and _cap_is_provably_noop(df, max_df):
+    An explicitly passed ``max_df`` keeps construction FULLY LAZY (no
+    bounded default-cap no-op probe) — see `ngram_jaccard_pairs`."""
+    if _cap_is_provably_noop(df, max_df):
         max_df = None
     # ONE lazy checkpoint on the slim (id, sorted distinct shingle-hash
     # array) table: it feeds the probe, the index, the df-count (under

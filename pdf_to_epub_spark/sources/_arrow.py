@@ -1,4 +1,4 @@
-"""The Arrow boundary every source parser shares.
+"""The Arrow boundary every source parser and writer shares.
 
 A parser is a row function: one input row's values in, zero or more
 output row tuples out, in output-schema column order.  This module turns
@@ -6,6 +6,11 @@ such a function into a narrow ``mapInArrow`` stage (no shuffle) and
 builds each output batch with column types taken from the output
 ``StructType`` — the schema a parser declares is the only place its
 types are written down.
+
+A writer (``documents_as_*``) is the inverse: `render_documents` runs
+its ``make(doc_id, text)`` per document through the same stage, so the
+synthetic payloads the parsers read back are rendered by one boundary
+too.
 
 `isolated` adds the per-document error isolation the binary container
 parsers promise: a payload the parser rejects, a crash, or an empty
@@ -19,7 +24,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, StructField, StructType
 
 RowFn = Callable[..., Iterable[tuple]]
 
@@ -51,6 +56,24 @@ def map_rows(
             )
 
     return df.select(*cols).mapInArrow(batches, schema)
+
+
+def render_documents(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    name: str,
+    dtype: DataType,
+    make: Callable[[int, str], object],
+) -> DataFrame:
+    """documents → ``(id, name: dtype)`` with ``make(int(id), text or "")``
+    per row; the id column keeps its input type and nullability."""
+    schema = StructType([docs.schema[id_col], StructField(name, dtype)])
+
+    def rows(doc_id, text):
+        return [(doc_id, make(int(doc_id), text or ""))]
+
+    return map_rows(docs, [id_col, text_col], schema, rows)
 
 
 def isolated(

@@ -37,6 +37,7 @@ from xml.sax.saxutils import escape
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -44,7 +45,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_to_epub_spark.sources._arrow import isolated, map_rows
+from pdf_to_epub_spark.sources._arrow import (
+    isolated,
+    map_rows,
+    render_documents,
+)
 
 W_NS = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
 
@@ -221,19 +226,8 @@ def documents_as_docx(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """documents → ``(doc_id, docx: binary)``, Arrow-batched, no shuffle."""
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    # no annotations: PEP-563 stringized hints break pandas_udf inference
-    @pandas_udf("binary")
-    def render(ids, texts):
-        return pd.Series(
-            [make_docx_bytes(int(i), t or "") for i, t in zip(ids, texts)]
-        )
-
-    return docs.select(
-        F.col(id_col), render(F.col(id_col), F.col(text_col)).alias("docx")
+    return render_documents(
+        docs, id_col, text_col, "docx", BinaryType(), make_docx_bytes
     )
 
 

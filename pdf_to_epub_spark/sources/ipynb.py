@@ -23,6 +23,9 @@ import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
+
+from pdf_to_epub_spark.sources._arrow import render_documents
 
 CELL_TOKENS = 12
 LINE_TOKENS = 4
@@ -80,19 +83,8 @@ def documents_as_ipynb(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """documents → ``(doc_id, nb: string)``, Arrow-batched."""
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    # no annotations: PEP-563 stringized hints break pandas_udf inference
-    @pandas_udf("string")
-    def render(ids, texts):
-        return pd.Series(
-            [make_ipynb(int(i), t or "") for i, t in zip(ids, texts)]
-        )
-
-    return docs.select(
-        F.col(id_col), render(F.col(id_col), F.col(text_col)).alias("nb")
+    return render_documents(
+        docs, id_col, text_col, "nb", StringType(), make_ipynb
     )
 
 

@@ -23,6 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
+
+from pdf_to_epub_spark.sources._arrow import render_documents
 
 SEC_TOKENS = 40
 TITLE_TOKENS = 3
@@ -60,19 +63,8 @@ def documents_as_latex(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """documents → ``(doc_id, tex: string)``, Arrow-batched."""
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    # no annotations: PEP-563 stringized hints break pandas_udf inference
-    @pandas_udf("string")
-    def render(ids, texts):
-        return pd.Series(
-            [make_latex(int(i), t or "") for i, t in zip(ids, texts)]
-        )
-
-    return docs.select(
-        F.col(id_col), render(F.col(id_col), F.col(text_col)).alias("tex")
+    return render_documents(
+        docs, id_col, text_col, "tex", StringType(), make_latex
     )
 
 

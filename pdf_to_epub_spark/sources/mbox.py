@@ -25,7 +25,6 @@ text flows into the shared quality/dedup pipeline unchanged.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -34,7 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_to_epub_spark.sources._arrow import map_rows
+from pdf_to_epub_spark.sources._arrow import map_rows, render_documents
 
 MSG_TOKENS = 50    # tokens per message
 LINE_TOKENS = 10   # tokens per body line
@@ -157,19 +156,8 @@ def documents_as_mbox(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """documents → ``(doc_id, mbox: string)``, Arrow-batched."""
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    # no annotations: PEP-563 stringized hints break pandas_udf inference
-    @pandas_udf("string")
-    def render(ids, texts):
-        return pd.Series(
-            [make_mbox(int(i), t or "") for i, t in zip(ids, texts)]
-        )
-
-    return docs.select(
-        F.col(id_col), render(F.col(id_col), F.col(text_col)).alias("mbox")
+    return render_documents(
+        docs, id_col, text_col, "mbox", StringType(), make_mbox
     )
 
 

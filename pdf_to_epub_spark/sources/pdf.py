@@ -36,6 +36,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -44,7 +45,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_to_epub_spark.sources._arrow import isolated, map_rows
+from pdf_to_epub_spark.sources._arrow import (
+    isolated,
+    map_rows,
+    render_documents,
+)
 
 
 class UnsupportedPdf(Exception):
@@ -632,20 +637,8 @@ def documents_as_pdfs(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """documents → (doc_id, pdf: binary), Arrow-batched."""
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    # no annotations: PEP-563 stringized hints (future-import above) break
-    # pandas_udf signature inference; the returnType argument is the contract
-    @pandas_udf("binary")
-    def render(ids, texts):
-        return pd.Series(
-            [doc_to_pdf(int(i), t or "") for i, t in zip(ids, texts)]
-        )
-
-    return docs.select(
-        F.col(id_col), render(F.col(id_col), F.col(text_col)).alias("pdf")
+    return render_documents(
+        docs, id_col, text_col, "pdf", BinaryType(), doc_to_pdf
     )
 
 
@@ -807,25 +800,13 @@ def documents_as_outlined_pdfs(
 ) -> DataFrame:
     """documents → (doc_id, pdf: binary) with the synthesized /Outlines
     tree attached, Arrow-batched."""
-    import pandas as pd
 
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def render(ids, texts):
-        return pd.Series(
-            [
-                make_pdf_bytes(
-                    _doc_pages(int(i), t or ""),
-                    doc_outline(int(i), t or "", part_stride),
-                )
-                for i, t in zip(ids, texts)
-            ]
+    def make(doc_id, text):
+        return make_pdf_bytes(
+            _doc_pages(doc_id, text), doc_outline(doc_id, text, part_stride)
         )
 
-    return docs.select(
-        F.col(id_col), render(F.col(id_col), F.col(text_col)).alias("pdf")
-    )
+    return render_documents(docs, id_col, text_col, "pdf", BinaryType(), make)
 
 
 # ---------------------------------------------------------------------------
@@ -872,22 +853,11 @@ def documents_as_two_column_pdfs(
 ) -> DataFrame:
     """documents → (doc_id, pdf: binary) in the two-column layout,
     Arrow-batched."""
-    import pandas as pd
 
-    from pyspark.sql.functions import pandas_udf
+    def make(doc_id, text):
+        return make_pdf_bytes(_doc_pages_two_column(doc_id, text))
 
-    @pandas_udf("binary")
-    def render(ids, texts):
-        return pd.Series(
-            [
-                make_pdf_bytes(_doc_pages_two_column(int(i), t or ""))
-                for i, t in zip(ids, texts)
-            ]
-        )
-
-    return docs.select(
-        F.col(id_col), render(F.col(id_col), F.col(text_col)).alias("pdf")
-    )
+    return render_documents(docs, id_col, text_col, "pdf", BinaryType(), make)
 
 
 def blocks_in_column_order(

@@ -37,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_to_epub_spark.sources._arrow import map_rows
+from pdf_to_epub_spark.sources._arrow import map_rows, render_documents
 
 POST_TOKENS = 40   # tokens per post (question or answer)
 LINE_TOKENS = 8    # tokens per body line
@@ -188,19 +188,8 @@ def documents_as_sedump(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """documents → ``(doc_id, xml: string)``, Arrow-batched."""
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    # no annotations: PEP-563 stringized hints break pandas_udf inference
-    @pandas_udf("string")
-    def render(ids, texts):
-        return pd.Series(
-            [make_sedump(int(i), t or "") for i, t in zip(ids, texts)]
-        )
-
-    return docs.select(
-        F.col(id_col), render(F.col(id_col), F.col(text_col)).alias("xml")
+    return render_documents(
+        docs, id_col, text_col, "xml", StringType(), make_sedump
     )
 
 

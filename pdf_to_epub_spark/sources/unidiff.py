@@ -20,6 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
+
+from pdf_to_epub_spark.sources._arrow import render_documents
 
 FILE_TOKENS = 60
 LINE_TOKENS = 10
@@ -50,19 +53,8 @@ def documents_as_unidiffs(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """documents → ``(doc_id, diff: string)``, Arrow-batched."""
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    # no annotations: PEP-563 stringized hints break pandas_udf inference
-    @pandas_udf("string")
-    def render(ids, texts):
-        return pd.Series(
-            [make_unidiff(int(i), t or "") for i, t in zip(ids, texts)]
-        )
-
-    return docs.select(
-        F.col(id_col), render(F.col(id_col), F.col(text_col)).alias("diff")
+    return render_documents(
+        docs, id_col, text_col, "diff", StringType(), make_unidiff
     )
 
 

@@ -30,7 +30,6 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -39,7 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_to_epub_spark.sources._arrow import map_rows
+from pdf_to_epub_spark.sources._arrow import map_rows, render_documents
 
 PARA_TOKENS = 30      # tokens per paragraph chunk
 HEADING_EVERY = 5     # a heading opens every 5th chunk
@@ -179,19 +178,8 @@ def documents_as_wikitext(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """documents → ``(doc_id, wiki: string)``, Arrow-batched."""
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    # no annotations: PEP-563 stringized hints break pandas_udf inference
-    @pandas_udf("string")
-    def render(ids, texts):
-        return pd.Series(
-            [make_wikitext(int(i), t or "") for i, t in zip(ids, texts)]
-        )
-
-    return docs.select(
-        F.col(id_col), render(F.col(id_col), F.col(text_col)).alias("wiki")
+    return render_documents(
+        docs, id_col, text_col, "wiki", StringType(), make_wikitext
     )
 
 

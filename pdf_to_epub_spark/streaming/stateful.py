@@ -20,6 +20,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from pdf_to_epub_spark.operators.resume import doc_hash_column
+
 FIRST_SEEN_SCHEMA = StructType(
     [
         StructField("doc_hash", StringType()),
@@ -67,7 +69,10 @@ def streaming_first_seen(
     NOT collapse into one key — sha2(NULL) is NULL, which would suppress
     every later distinct NULL-payload url as a "duplicate".  They key on a
     url-scoped sentinel instead, so re-crawls of the same url dedup while
-    distinct urls pass through.
+    distinct urls pass through.  Every other payload keys on
+    `resume.doc_hash_column` — the ``doc_hash`` that extraction records —
+    so first-seen keys join against a committed table, malformed UTF-8
+    included.
     """
     payload = F.col(payload_col)
     hashed = pages.withColumn(
@@ -78,7 +83,7 @@ def streaming_first_seen(
                 F.encode(F.concat(F.lit("\x00null\x00"), F.col("url")), "UTF-8"),
                 256,
             ),
-        ).otherwise(F.sha2(F.encode(payload, "UTF-8"), 256)),
+        ).otherwise(doc_hash_column(payload_col)),
     ).select("doc_hash", "url", "warc_ts")
     return hashed.groupBy("doc_hash").applyInPandasWithState(
         _first_seen_fn,

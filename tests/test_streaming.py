@@ -105,6 +105,38 @@ def test_stateful_first_seen_dedup(spark, tmp_path):
     assert len(got2) == 10  # only the 3 new hashes were appended
 
 
+def test_first_seen_key_is_the_extraction_doc_hash(spark, tmp_path):
+    """A binary page that is not valid UTF-8 (a cp1252 byte) keys
+    first-seen dedup on the same ``doc_hash`` that extraction records,
+    so streamed first-seen keys join against a committed table."""
+    from pdf_to_epub_spark.operators import extract_documents
+    from pdf_to_epub_spark.streaming import PAGES_SCHEMA
+    from pdf_to_epub_spark.streaming.stateful import streaming_first_seen
+
+    inp = tmp_path / "cp1252_in"
+    inp.mkdir()
+    row = {"url": "doc://cafe", "warc_ts": None, "html": b"<p>caf\xe9</p>",
+           "text": None, "lang": "fr"}
+    _write_batch(inp, [row], "b.parquet")
+    q = (
+        streaming_first_seen(
+            spark.readStream.schema(PAGES_SCHEMA).parquet(str(inp)),
+            payload_col="html",
+        )
+        .writeStream.format("memory")
+        .queryName("first_seen_cp1252")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    seen = [r.doc_hash for r in spark.table("first_seen_cp1252").collect()]
+    docs = spark.read.schema(PAGES_SCHEMA).parquet(str(inp))
+    extracted = [r.doc_hash for r in extract_documents(docs).collect()]
+    assert len(seen) == 1
+    assert seen == extracted
+
+
 def test_incremental_html_extract(spark, tmp_path):
     """HTML-mode streaming: boilerplate pages arrive incrementally; the
     recovered main content matches ground truth across batches."""

@@ -256,10 +256,10 @@ def test_text_reuse_spans_restricted_to_candidate_pairs(
     assert any(r.diag == 0 and r.a_start == 1 for r in rows)
 
 
-def test_probe_false_construction_runs_no_job(spark):
-    """r6 (r5 advice): ``probe=False`` keeps operator construction fully
+def test_explicit_cap_construction_runs_no_probe(spark, monkeypatch):
+    """An explicitly passed ``max_df`` keeps operator construction fully
     lazy — no bounded limit().count() probe job fires, and the capped
-    plan is built as-is even under the default cap."""
+    plan is built as-is even when the cap equals the default value."""
     import pdf_to_epub_spark.operators.dedup as dd
     from pdf_to_epub_spark.operators import (
         containment_pairs,
@@ -269,45 +269,43 @@ def test_probe_false_construction_runs_no_job(spark):
     rows = [(i, f"alpha beta gamma delta epsilon u{i} v{i} w{i}")
             for i in range(12)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
+    cap = int(dd.DEFAULT_SHINGLE_MAX_DF)
 
     calls: list[int] = []
     orig = dd._cold_shingle_sets
 
     def recording(hashed, max_df):
-        calls.append(int(max_df))
+        calls.append(max_df)
         return orig(hashed, max_df)
 
     # NB a construction-time job count of zero is NOT achievable here:
     # under AQE, the builders' lazy localCheckpoints materialize their
     # upstream shuffle stages when the plan is converted to an RDD (the
     # work is reused at consumption, not repeated).  The probe contract
-    # is therefore asserted directly: probe=False must never invoke the
-    # bounded count probe.
-    probed: list[int] = []
-    orig_probe = dd._cap_is_provably_noop
+    # is therefore asserted directly: the probe's bounded limit() must
+    # never be built.
+    limits: list[int] = []
+    orig_limit = type(df).limit
 
-    def spying_probe(pdf, m):
-        probed.append(1)
-        return orig_probe(pdf, m)
+    def spying_limit(self, n):
+        limits.append(n)
+        return orig_limit(self, n)
 
-    dd._cold_shingle_sets = recording
-    dd._cap_is_provably_noop = spying_probe
-    try:
-        ngram_jaccard_pairs(df, k=3, threshold=0.8, probe=False)
-        containment_pairs(df, k=5, threshold=0.8, probe=False)
-        assert probed == [], "probe=False must skip the count probe"
-        # probe skipped -> capped machinery built with the DEFAULT cap
-        assert calls == [dd.DEFAULT_SHINGLE_MAX_DF] * 2
-        ngram_jaccard_pairs(df, k=3, threshold=0.8)
-        assert probed == [1], "default must still probe"
-    finally:
-        dd._cold_shingle_sets = orig
-        dd._cap_is_provably_noop = orig_probe
+    monkeypatch.setattr(dd, "_cold_shingle_sets", recording)
+    monkeypatch.setattr(type(df), "limit", spying_limit)
+    ngram_jaccard_pairs(df, k=3, threshold=0.8, max_df=cap)
+    containment_pairs(df, k=5, threshold=0.8, max_df=cap)
+    assert limits == [], "an explicit cap must skip the count probe"
+    # probe skipped -> capped machinery built with the explicit cap
+    assert calls == [cap, cap]
+    ngram_jaccard_pairs(df, k=3, threshold=0.8)
+    assert limits == [cap + 1], "default must still probe"
+    monkeypatch.undo()
 
     # results identical to the probing default on a tiny corpus
     got = {
         (r.id_a, r.id_b)
-        for r in containment_pairs(df, k=5, threshold=0.8, probe=False).collect()
+        for r in containment_pairs(df, k=5, threshold=0.8, max_df=cap).collect()
     }
     want = {
         (r.id_a, r.id_b)
