@@ -37,6 +37,19 @@ _CSS = (
 )
 
 
+def _zip_entry(name: str) -> zipfile.ZipInfo:
+    """A zip member header with a fixed date: ``writestr`` with a bare
+    name stamps the wall-clock time, and retries and re-runs must
+    reproduce an EPUB or ``.docx`` bit-for-bit (matches the fixed
+    ``dcterms:modified`` of the OPF).  A bare ``ZipInfo`` is STORED, so
+    callers pass ``compress_type``."""
+    zi = zipfile.ZipInfo(name, date_time=(2020, 1, 1, 0, 0, 0))
+    # bare ZipInfo leaves external_attr 0 (mode 000 on unix
+    # extractors); mirror writestr's bare-name default
+    zi.external_attr = 0o600 << 16
+    return zi
+
+
 def _paragraphs(blocks: list[dict]) -> list[str]:
     out = []
     for b in blocks:
@@ -123,26 +136,13 @@ def epub_bytes(
         "</package>\n"
     )
 
-    # fixed entry date: zipfile stamps wall-clock time on bare-name
-    # writestr, which made "identical" EPUBs byte-differ across seconds —
-    # retries/re-runs must reproduce the artifact bit-for-bit (matches the
-    # fixed dcterms:modified above)
-    _DATE = (2020, 1, 1, 0, 0, 0)
-
-    def entry(name: str) -> zipfile.ZipInfo:
-        zi = zipfile.ZipInfo(name, date_time=_DATE)
-        # bare ZipInfo leaves external_attr 0 (mode 000 on unix
-        # extractors); mirror writestr's bare-name default
-        zi.external_attr = 0o600 << 16
-        return zi
-
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w") as z:
         # EPUB spec: mimetype first, STORED (uncompressed)
-        z.writestr(entry("mimetype"), "application/epub+zip", compress_type=zipfile.ZIP_STORED)
-        z.writestr(entry("META-INF/container.xml"), _CONTAINER_XML, compress_type=zipfile.ZIP_DEFLATED)
+        z.writestr(_zip_entry("mimetype"), "application/epub+zip", compress_type=zipfile.ZIP_STORED)
+        z.writestr(_zip_entry("META-INF/container.xml"), _CONTAINER_XML, compress_type=zipfile.ZIP_DEFLATED)
         for name, content in files.items():
-            z.writestr(entry(name), content, compress_type=zipfile.ZIP_DEFLATED)
+            z.writestr(_zip_entry(name), content, compress_type=zipfile.ZIP_DEFLATED)
     return buf.getvalue()
 
 

@@ -153,6 +153,8 @@ def decode_wav(raw: bytes) -> tuple[int, int, list[int]]:
         raise UnsupportedMedia(f"WAV: {exc}") from exc
     if width != 2:
         raise UnsupportedMedia(f"WAV sample width {width} not supported")
+    if len(frames) % 2:
+        raise UnsupportedMedia("WAV: truncated frame data")
     ints = struct.unpack(f"<{len(frames) // 2}h", frames)
     if nch > 1:  # mix down
         ints = [

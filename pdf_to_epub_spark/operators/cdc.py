@@ -21,11 +21,12 @@ disagree:
 window, so the global rolling hash equals a per-chunk fresh-start hash
 and chunking is strictly content-local.
 
-Scale design: the chunker is a numpy-vectorized ``mapInPandas`` map —
-the rolling hash is computed for a whole document with 64 shifted
-vector adds (no per-byte Python), candidate positions are sparse
-(~1/2^avg_bits bytes), and only the candidate-selection walk is a
-Python loop over ~n/avg_chunk items.  Downstream dedup is a plain
+Scale design: the chunker is a numpy-vectorized row function on the
+package's one Arrow boundary (``sources/_arrow.map_rows``) — the rolling
+hash is computed for a whole document with 64 shifted vector adds (no
+per-byte Python), candidate positions are sparse (~1/2^avg_bits bytes),
+and only the candidate-selection walk is a Python loop over
+~n/avg_chunk items.  Downstream dedup is a plain
 ``groupBy(chunk_hash)`` over slim (hash, len) rows — map-side combine,
 one shuffle, no text movement.  At 100 TB the chunk table is the
 artifact you persist; re-chunking only the recrawled partition keeps
@@ -38,9 +39,11 @@ deterministic, documented, replayable on both sides of the oracle.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+from pdf_to_epub_spark.sources._arrow import map_rows
 
 
 def _gear_table() -> list[int]:
@@ -162,7 +165,7 @@ def cdc_chunks(
     the downstream dedup groupBy never moves text.  Arrow-batched, no
     per-row Python in the hash (numpy vector form; equality with the
     reference loop is property-tested)."""
-    import pandas as pd
+    import numpy as np
 
     # same invalid-parameter contract as the reference loop (the numpy
     # path would otherwise silently chunk with a partial hash window)
@@ -171,48 +174,25 @@ def cdc_chunks(
     if max_size <= min_size:
         raise ValueError("max_size must exceed min_size")
 
-    # carry the caller's id type through (url keys are the natural
-    # snapshot key; only integer ids take the Int64 nullable path)
-    id_type = df.schema[id_col].dataType.simpleString()
-    id_is_int = id_type in ("bigint", "int", "smallint", "tinyint", "long")
-    out_schema = (
-        f"{id_col} {id_type}, chunk_idx int, chunk_hash string, chunk_bytes int"
-    )
+    # the id keeps the caller's type (url keys are the natural snapshot key)
+    schema = StructType([
+        StructField(id_col, df.schema[id_col].dataType),
+        StructField("chunk_idx", IntegerType()),
+        StructField("chunk_hash", StringType()),
+        StructField("chunk_bytes", IntegerType()),
+    ])
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
+    def rows(doc_id, text):
+        raw = (text or "").encode("utf-8")
+        cuts = _np_boundaries(
+            np.frombuffer(raw, dtype=np.uint8), min_size, avg_bits, max_size
+        )
+        return [
+            (doc_id, ci, hashlib.md5(raw[start:end]).hexdigest(), end - start)
+            for ci, (start, end) in enumerate(zip([0, *cuts], cuts))
+        ]
 
-        for pdf in batches:
-            ids, idxs, hashes, sizes = [], [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None or t != t:  # None / NaN
-                    continue
-                raw = t.encode("utf-8")
-                if not raw:
-                    continue
-                arr = np.frombuffer(raw, dtype=np.uint8)
-                start = 0
-                for ci, end in enumerate(
-                    _np_boundaries(arr, min_size, avg_bits, max_size)
-                ):
-                    piece = raw[start:end]
-                    ids.append(i)
-                    idxs.append(ci)
-                    hashes.append(hashlib.md5(piece).hexdigest())
-                    sizes.append(end - start)
-                    start = end
-            yield pd.DataFrame(
-                {
-                    id_col: pd.array(ids, dtype="Int64")
-                    if id_is_int
-                    else pd.array(ids, dtype="object"),
-                    "chunk_idx": pd.array(idxs, dtype="Int32"),
-                    "chunk_hash": hashes,
-                    "chunk_bytes": pd.array(sizes, dtype="Int32"),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(run, out_schema)
+    return map_rows(df, [id_col, text_col], schema, rows)
 
 
 def chunk_dedup_table(chunks: DataFrame) -> DataFrame:

@@ -20,10 +20,10 @@ Scale design (100 TB):
   count) rows per batch, then a map-side-combined groupBy and a BOUNDED
   784-row collect: training shuffles O(batches * 784) slim rows regardless
   of corpus size, and the driver holds one 784-entry cost vector.
-- Scoring is a narrow ``mapInArrow`` over the scan with ZERO shuffles: the
-  cost vector ships in the closure and each document's score is
-  ``costvec[codes].sum()`` over its numpy bigram codes.  No text, array,
-  or float rides any shuffle.
+- Scoring is a narrow row stage (``sources/_arrow.map_rows``) over the
+  scan with ZERO shuffles: the cost vector ships in the closure and each
+  document's score is ``costvec[codes].sum()`` over its numpy bigram
+  codes.  No text, array, or float rides any shuffle.
 - ``train_df`` lets production train on a clean split (the CCNet shape:
   train on Wikipedia, score Common Crawl) — unseen bigrams then fall back
   to the smoothed per-context floor, and unseen contexts to the uniform
@@ -37,6 +37,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from pdf_to_epub_spark.sources._arrow import map_rows
 
 ALPHABET_SIZE = 28  # a-z, space, '#'
 _MICRO = 1_000_000.0
@@ -126,44 +129,32 @@ def bigram_lm_scores(
     import re
 
     import numpy as np
-    import pyarrow as pa
 
     costvec = _train_cost_vector(
         train_df if train_df is not None else df, id_col, text_col
     )
     lut = _char_lut()
+    sub = re.compile("[^a-z ]")
+    sel = df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+    schema = StructType([
+        StructField("doc_id", sel.schema["doc_id"].dataType),
+        StructField("n_bigrams", LongType()),
+        StructField("cost_micro_total", LongType()),
+    ])
 
-    def score_batches(it):
-        sub = re.compile("[^a-z ]")
-        for batch in it:
-            ids = batch.column(0)
-            texts = batch.column(1).to_pylist()
-            n_out = np.zeros(len(texts), dtype=np.int64)
-            c_out = np.zeros(len(texts), dtype=np.int64)
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                a = lut[
-                    np.frombuffer(
-                        sub.sub("#", t.lower()).encode("ascii"), dtype=np.uint8
-                    )
-                ]
-                if len(a) >= 2:
-                    codes = a[:-1] * 28 + a[1:]
-                    n_out[j] = len(codes)
-                    c_out[j] = costvec[codes].sum()
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(n_out), pa.array(c_out)],
-                names=["doc_id", "n_bigrams", "cost_micro_total"],
+    def rows(doc_id, text):
+        a = lut[
+            np.frombuffer(
+                sub.sub("#", (text or "").lower()).encode("ascii"),
+                dtype=np.uint8,
             )
+        ]
+        if len(a) < 2:
+            return [(doc_id, 0, 0)]
+        codes = a[:-1] * 28 + a[1:]
+        return [(doc_id, len(codes), int(costvec[codes].sum()))]
 
-    id_type = df.select(F.col(id_col)).schema[0].dataType.simpleString()
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col)
-    ).mapInArrow(
-        score_batches,
-        f"doc_id {id_type}, n_bigrams long, cost_micro_total long",
-    )
+    return map_rows(sel, sel.columns, schema, rows)
 
 
 def lm_partition(

@@ -1,8 +1,9 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 At corpus scale, media payloads ride as ``binary`` columns next to typed
-metadata; decode / feature-extraction / resize / frame-sampling run as
-Arrow-batched ``mapInPandas`` stages.
+metadata.  Decode and fingerprinting are row functions on the package's
+one Arrow boundary (``sources/_arrow.map_rows``); resize and
+frame-sampling plans are JVM-side column algebra.
 
 Decode is REAL where the Python standard library suffices
 (functions/mediacodec.py): BMP pixel decode → pooled-luminance embedding,
@@ -19,9 +20,6 @@ BMP/PNG/JPEG/GIF/RIFF-WAV/MP3/MP4 on the binary prefix — no Python there.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -35,8 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-if TYPE_CHECKING:
-    import pandas as pd
+from pdf_to_epub_spark.sources._arrow import map_rows
 
 FEATURE_SCHEMA = StructType(
     [
@@ -113,6 +110,8 @@ def decode_media(raw: bytes, container: str) -> dict:
         }
     if container == "riff":
         rate, nch, samples = mc.decode_wav(raw)
+        if rate == 0:
+            raise mc.UnsupportedMedia("WAV: zero frame rate")
         rms = (
             (sum(s * s for s in samples) / len(samples)) ** 0.5
             if samples else 0.0
@@ -162,55 +161,28 @@ def decode_media(raw: bytes, container: str) -> dict:
     )
 
 
-def _feature_batches():
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+def _feature_row(mid, url, mtype, container, payload):
+    """One media row → one FEATURE_SCHEMA row; a payload the codecs
+    reject or crash on becomes an ``unsupported`` / ``error`` row whose
+    ``meta`` keeps the message."""
+    from pdf_to_epub_spark.functions.mediacodec import UnsupportedMedia
 
-        from pdf_to_epub_spark.functions.mediacodec import UnsupportedMedia
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "media_id", "url", "media_type", "container", "n_bytes",
-                "width", "height", "n_frames", "embedding", "meta", "status",
-            )}
-            for mid, url, mtype, container, payload in zip(
-                pdf["media_id"], pdf["url"], pdf["media_type"],
-                pdf["container"], pdf["payload"],
-            ):
-                out["media_id"].append(mid)
-                out["url"].append(url)
-                out["media_type"].append(mtype)
-                out["container"].append(container)
-                raw = bytes(payload) if payload is not None else b""
-                out["n_bytes"].append(len(raw))
-                try:
-                    feat = decode_media(raw, container)
-                    out["width"].append(feat["width"])
-                    out["height"].append(feat["height"])
-                    out["n_frames"].append(feat["n_frames"])
-                    emb = feat["embedding"]
-                    out["embedding"].append(
-                        [float(x) for x in emb] if emb is not None else None
-                    )
-                    out["meta"].append(feat["meta"])
-                    out["status"].append("ok")
-                except UnsupportedMedia as exc:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["n_frames"].append(None)
-                    out["embedding"].append(None)
-                    out["meta"].append({"error": str(exc)[:120]})
-                    out["status"].append("unsupported")
-                except Exception as exc:  # noqa: BLE001 — quarantine row
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["n_frames"].append(None)
-                    out["embedding"].append(None)
-                    out["meta"].append({"error": repr(exc)[:120]})
-                    out["status"].append("error")
-            yield pd.DataFrame(out)
-
-    return gen
+    raw = bytes(payload) if payload is not None else b""
+    head = (mid, url, mtype, container, len(raw))
+    try:
+        feat = decode_media(raw, container)
+    except UnsupportedMedia as exc:
+        return [(*head, None, None, None, None,
+                 {"error": str(exc)[:120]}, "unsupported")]
+    except Exception as exc:  # noqa: BLE001 — quarantine row
+        return [(*head, None, None, None, None,
+                 {"error": repr(exc)[:120]}, "error")]
+    emb = feat["embedding"]
+    return [(
+        *head, feat["width"], feat["height"], feat["n_frames"],
+        [float(x) for x in emb] if emb is not None else None,
+        feat["meta"], "ok",
+    )]
 
 
 def extract_media_features(
@@ -227,7 +199,12 @@ def extract_media_features(
     df = media.withColumn("container", sniff_container("payload"))
     if salt_partitions:
         df = df.repartition(salt_partitions, F.xxhash64("url"))
-    return df.mapInPandas(_feature_batches(), FEATURE_SCHEMA)
+    return map_rows(
+        df,
+        ["media_id", "url", "media_type", "container", "payload"],
+        FEATURE_SCHEMA,
+        _feature_row,
+    )
 
 
 def frame_sample_plan(
@@ -393,65 +370,41 @@ def media_fingerprints(
     decodable audio (WAV PCM) — both resize/re-encode tolerant, both
     64-bit so downstream banding shares one code path with SimHash.
     Header-only and undecodable containers surface as honest
-    ``unsupported`` rows with NULL fp (same contract as
-    extract_media_features).  One Arrow stage, binary payload is the
-    only column crossing; optional url-less id-hash salting mirrors the
-    media-feature partitioning contract."""
-    from pdf_to_epub_spark.operators.multimodal import sniff_container
+    ``unsupported`` rows with NULL fp, and a payload a codec crashes on
+    as an ``error`` row (same contract as extract_media_features).  One
+    Arrow stage, binary payload is the only column crossing; optional
+    url-less id-hash salting mirrors the media-feature partitioning
+    contract."""
+    from pdf_to_epub_spark.functions.mediacodec import (
+        UnsupportedMedia,
+        ahash64,
+        audio_fingerprint64,
+        decode_bmp,
+        decode_wav,
+        to_signed64,
+    )
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from pdf_to_epub_spark.functions.mediacodec import (
-            UnsupportedMedia,
-            ahash64,
-            audio_fingerprint64,
-            decode_bmp,
-            decode_wav,
-            to_signed64,
-        )
-
-        for pdf in batches:
-            ids, kinds, fps, statuses = [], [], [], []
-            for mid, container, payload in zip(
-                pdf["media_id"], pdf["container"], pdf["payload"]
-            ):
-                ids.append(mid)
-                raw = bytes(payload) if payload is not None else b""
-                try:
-                    if container == "bmp":
-                        w, h, gray = decode_bmp(raw)
-                        kinds.append("image")
-                        fps.append(to_signed64(ahash64(gray, w, h)))
-                        statuses.append("ok")
-                    elif container == "riff":  # RIFF: WAV or unsupported
-                        _, _, samples = decode_wav(raw)
-                        kinds.append("audio")
-                        fps.append(to_signed64(audio_fingerprint64(samples)))
-                        statuses.append("ok")
-                    else:
-                        kinds.append(None)
-                        fps.append(None)
-                        statuses.append("unsupported")
-                except UnsupportedMedia:
-                    kinds.append(None)
-                    fps.append(None)
-                    statuses.append("unsupported")
-            # fp MUST be nullable Int64: a plain list with a None makes
-            # pandas infer float64, which silently rounds 64-bit hashes
-            # to the 53-bit double mantissa (observed: ...910323 →
-            # ...910528) before Arrow ever sees them.
-            yield pd.DataFrame(
-                {"media_id": ids, "kind": kinds,
-                 "fp": pd.array(fps, dtype="Int64"),
-                 "status": statuses}
-            )
+    def rows(mid, container, payload):
+        raw = bytes(payload) if payload is not None else b""
+        try:
+            if container == "bmp":
+                w, h, gray = decode_bmp(raw)
+                return [(mid, "image", to_signed64(ahash64(gray, w, h)), "ok")]
+            if container == "riff":  # RIFF: WAV or unsupported
+                _, _, samples = decode_wav(raw)
+                fp = to_signed64(audio_fingerprint64(samples))
+                return [(mid, "audio", fp, "ok")]
+        except UnsupportedMedia:
+            pass
+        except Exception:  # noqa: BLE001 — quarantine row
+            return [(mid, None, None, "error")]
+        return [(mid, None, None, "unsupported")]
 
     df = media.withColumn("container", sniff_container("payload"))
     if salt_partitions:
         df = df.repartition(salt_partitions, F.xxhash64("media_id"))
-    return df.select("media_id", "container", "payload").mapInPandas(
-        gen, FINGERPRINT_SCHEMA
+    return map_rows(
+        df, ["media_id", "container", "payload"], FINGERPRINT_SCHEMA, rows
     )
 
 

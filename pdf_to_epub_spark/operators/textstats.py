@@ -11,7 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 from pyspark.sql.window import Window
+
+from pdf_to_epub_spark.sources._arrow import map_rows
 
 # Tiny per-language stopword seeds for the n-gram/stopword heuristic.
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -551,37 +554,29 @@ def normalize_unicode(
     """Unicode normalization (NFC/NFKC/NFD/NFKD) — the canonicalization
     step web-text pipelines run before hashing/dedup so that 'é' and
     'e'+U+0301 dedup together.  Spark has no builtin normalizer, so this
-    is an Arrow-batched pass (unicodedata is a C module; the per-batch
-    loop is pointer chasing, not codepoint work).  Python's unicodedata
-    and DuckDB's utf8proc implement the same UAX #15 tables, which is what
-    makes the NFC form exactly oracle-checkable.
+    is a row function on the package's Arrow boundary (unicodedata is a
+    C module; the per-row loop is pointer chasing, not codepoint work).
+    Python's unicodedata and DuckDB's utf8proc implement the same UAX #15
+    tables, which is what makes the NFC form exactly oracle-checkable.
 
     Returns ``(doc_id, text_norm, changed)``."""
     import unicodedata
 
-    import pyarrow as pa
-
-    def batches(it):
-        for b in it:
-            texts = b.column(1).to_pylist()
-            out = [
-                unicodedata.normalize(form, t) if t is not None else None
-                for t in texts
-            ]
-            changed = [
-                (o != t) if t is not None else None
-                for o, t in zip(out, texts)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.array(out, pa.string()), pa.array(changed)],
-                names=["doc_id", "text_norm", "changed"],
-            )
-
     # id passes through at its input type (string urls included)
-    id_type = df.select(F.col(id_col)).schema[0].dataType.simpleString()
-    return df.select(F.col(id_col).alias("doc_id"), F.col(text_col)).mapInArrow(
-        batches, f"doc_id {id_type}, text_norm string, changed boolean"
-    )
+    sel = df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+    schema = StructType([
+        StructField("doc_id", sel.schema["doc_id"].dataType),
+        StructField("text_norm", StringType()),
+        StructField("changed", BooleanType()),
+    ])
+
+    def rows(doc_id, text):
+        if text is None:
+            return [(doc_id, None, None)]
+        norm = unicodedata.normalize(form, text)
+        return [(doc_id, norm, norm != text)]
+
+    return map_rows(sel, sel.columns, schema, rows)
 
 
 def sentence_stats(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -1,11 +1,16 @@
-"""The Arrow boundary every source parser and writer shares.
+"""The Arrow boundary every source parser and writer, and every operator
+row stage, shares.
 
 A parser is a row function: one input row's values in, zero or more
 output row tuples out, in output-schema column order.  This module turns
 such a function into a narrow ``mapInArrow`` stage (no shuffle) and
 builds each output batch with column types taken from the output
 ``StructType`` — the schema a parser declares is the only place its
-types are written down.
+types are written down.  The operators' row stages (content-defined
+chunking, Unicode normalization, bigram-LM scoring, media features and
+fingerprints) and the TFRecord reader are row functions on the same
+stage, so no caller writes its types twice or meets pandas dtype
+inference (a nullable 64-bit hash column inferred as float64).
 
 A writer (``documents_as_*``) is the inverse: `render_documents` runs
 its ``make(doc_id, text)`` per document through the same stage, so the

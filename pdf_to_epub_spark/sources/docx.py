@@ -45,6 +45,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_to_epub_spark.export import _zip_entry
 from pdf_to_epub_spark.sources._arrow import (
     isolated,
     map_rows,
@@ -155,10 +156,15 @@ def make_docx_bytes(doc_id: int, text: str) -> bytes:
         f'<w:document xmlns:w="{W_NS}"><w:body>{paras}</w:body></w:document>'
     )
     buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("[Content_Types].xml", _CONTENT_TYPES)
-        zf.writestr("_rels/.rels", _RELS)
-        zf.writestr("word/document.xml", document)
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, part in (
+            ("[Content_Types].xml", _CONTENT_TYPES),
+            ("_rels/.rels", _RELS),
+            ("word/document.xml", document),
+        ):
+            zf.writestr(
+                _zip_entry(name), part, compress_type=zipfile.ZIP_DEFLATED
+            )
     return buf.getvalue()
 
 

@@ -45,6 +45,16 @@ import struct
 from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from pdf_to_epub_spark.sources._arrow import map_rows
 
 _CRC32C_POLY = 0x82F63B78  # Castagnoli, reflected
 
@@ -370,30 +380,22 @@ def parse_tfrecord_contents(
     string via permissive cast semantics (invalid UTF-8 stays NULL-free:
     we decode with ``errors='replace'`` — web bytes must never throw,
     see PLANS.md on Spark 4 F.decode)."""
-    import pandas as pd
-
-    fields = (
-        [f"{c} string" for c in bytes_cols]
-        + [f"{c} array<bigint>" for c in int_cols]
-        + [f"{c} array<double>" for c in float_cols]
+    schema = StructType(
+        [StructField(c, StringType()) for c in bytes_cols]
+        + [StructField(c, ArrayType(LongType())) for c in int_cols]
+        + [StructField(c, ArrayType(DoubleType())) for c in float_cols]
     )
-    schema = ", ".join(fields)
 
-    def parse(batches):
-        for pdf in batches:
-            rows: dict[str, list] = {c: [] for c in (*bytes_cols, *int_cols, *float_cols)}
-            for blob in pdf[content_col]:
-                for payload in iter_tfrecord_bytes(bytes(blob), verify_crc):
-                    feats = decode_example(payload)
-                    for c in bytes_cols:
-                        vs = feats.get(c, [])
-                        rows[c].append(
-                            vs[0].decode("utf-8", errors="replace") if vs else None
-                        )
-                    for c in int_cols:
-                        rows[c].append(list(feats.get(c, [])))
-                    for c in float_cols:
-                        rows[c].append([float(v) for v in feats.get(c, [])])
-            yield pd.DataFrame(rows)
+    def rows(blob):
+        for payload in iter_tfrecord_bytes(bytes(blob), verify_crc):
+            feats = decode_example(payload)
+            yield (
+                *(
+                    vs[0].decode("utf-8", errors="replace") if vs else None
+                    for vs in (feats.get(c, []) for c in bytes_cols)
+                ),
+                *(list(feats.get(c, [])) for c in int_cols),
+                *([float(v) for v in feats.get(c, [])] for c in float_cols),
+            )
 
-    return files.mapInPandas(parse, schema)
+    return map_rows(files, [content_col], schema, rows)

@@ -29,6 +29,15 @@ def test_roundtrip_long_doc():
     assert styles.count("BodyText") == 7
 
 
+def test_bytes_do_not_depend_on_wall_clock(monkeypatch):
+    import time
+
+    monkeypatch.setattr(time, "time", lambda: 1_000_000_000.0)
+    first = make_docx_bytes(7, LONG)
+    monkeypatch.setattr(time, "time", lambda: 1_600_000_000.0)
+    assert make_docx_bytes(7, LONG) == first
+
+
 def test_empty_doc_still_yields_heading():
     got = extract_docx_blocks(make_docx_bytes(3, ""))
     assert got == [("Heading1", "Section 3.0 — R&D <draft>")]

@@ -32,6 +32,12 @@ from pdf_to_epub_spark.operators.multimodal import (
 
 N = 70  # 10 of each of the 7 container kinds
 
+_WAV = make_wav(list(range(50)))  # 44-byte header + 100-byte data chunk
+# the data chunk declares 100 bytes but holds 51: an odd frame buffer
+_TRUNCATED_WAV = _WAV[:44 + 51]
+# sample rate and byte rate zeroed in the fmt chunk
+_ZERO_RATE_WAV = _WAV[:24] + bytes(8) + _WAV[32:]
+
 
 # -- pure codec tests (no Spark) --------------------------------------------
 
@@ -243,12 +249,17 @@ def test_fuzz_codecs_never_crash():
         "gif": b"GIF89a", "riff": b"RIFF", "mp3": b"ID3",
         "mp4": b"\x00\x00\x00\x18ftyp",
     }
+    cases = []
     for seed in range(80):
         rng = random.Random(seed)
         container = rng.choice(list(magics))
-        payload = magics[container] + bytes(
+        cases.append((container, magics[container] + bytes(
             rng.getrandbits(8) for _ in range(rng.randint(0, 400))
-        )
+        )))
+    # random bytes after RIFF never form a valid 'fmt ' chunk, so the
+    # structurally valid but broken WAVs are fixed inputs
+    cases += [("riff", _TRUNCATED_WAV), ("riff", _ZERO_RATE_WAV)]
+    for container, payload in cases:
         try:
             feat = decode_media(payload, container)
             assert feat["width"] is None or feat["width"] >= 0
@@ -291,6 +302,31 @@ def test_media_fingerprints_and_dedup_clusters(spark):
     assert 7 not in out                               # unsupported filtered
     st = {r.media_id: r.status for r in fps.collect()}
     assert st[7] == "unsupported"
+
+
+def test_media_fingerprints_isolate_codec_failures(spark, monkeypatch):
+    """A payload a codec rejects is an ``unsupported`` row and one it
+    crashes on an ``error`` row — never a failed job."""
+    from pdf_to_epub_spark.functions import mediacodec
+    from pdf_to_epub_spark.operators.multimodal import media_fingerprints
+
+    bmp = make_bmp(8, 8, lambda x, y: (x * 30, y * 30, 0))
+    media = spark.createDataFrame(
+        [(0, _TRUNCATED_WAV), (1, _WAV), (2, bmp)],
+        "media_id long, payload binary",
+    )
+    got = {r.media_id: tuple(r) for r in media_fingerprints(media).collect()}
+    assert got[0] == (0, None, None, "unsupported")
+    assert got[1][1] == "audio" and got[1][3] == "ok"
+    assert got[2][1] == "image" and got[2][3] == "ok"
+
+    def crash(raw):
+        raise ValueError("codec crashed")
+
+    monkeypatch.setattr(mediacodec, "decode_bmp", crash)
+    got = {r.media_id: tuple(r) for r in media_fingerprints(media).collect()}
+    assert got[2] == (2, None, None, "error")
+    assert got[1][3] == "ok"
 
 
 # ------------------------------------------------------ document router
