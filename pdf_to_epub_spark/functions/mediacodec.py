@@ -155,6 +155,8 @@ def decode_wav(raw: bytes) -> tuple[int, int, list[int]]:
         raise UnsupportedMedia(f"WAV sample width {width} not supported")
     if len(frames) % 2:
         raise UnsupportedMedia("WAV: truncated frame data")
+    if rate == 0:
+        raise UnsupportedMedia("WAV: zero frame rate")
     ints = struct.unpack(f"<{len(frames) // 2}h", frames)
     if nch > 1:  # mix down
         ints = [

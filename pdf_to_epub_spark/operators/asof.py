@@ -27,7 +27,6 @@ def asof_join(
     time_left: str,
     time_right: str,
     value_cols: list[str],
-    direction: str = "backward",
 ) -> DataFrame:
     """For each left row, attach the right row with the greatest
     ``time_right <= time_left`` within the same key (``backward``; the
@@ -36,9 +35,6 @@ def asof_join(
     The right side should be pre-deduplicated per (key, time) for
     deterministic results when times tie.
     """
-    if direction != "backward":
-        raise NotImplementedError("only backward as-of is implemented")
-
     lt = left.select(
         F.col(key_left).alias("_k"),
         F.col(time_left).alias("_t"),

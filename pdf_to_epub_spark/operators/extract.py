@@ -38,7 +38,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from pdf_to_epub_spark.sources._arrow import map_rows
+from pdf_to_epub_spark.sources._arrow import map_rows, record_batch
 
 from .resume import doc_hash_column, resume_payload_col
 
@@ -68,92 +68,39 @@ EXTRACTED_SCHEMA = StructType(
     ]
 )
 
+# The seven columns the stage computes; the first four pass through.
+_COMPUTED_SCHEMA = StructType(EXTRACTED_SCHEMA.fields[4:])
+
+
 def _result_batches_arrow(fn):
     """mapInArrow worker factory: run ``fn(value) -> ExtractResult`` over
     the ``payload`` column of each batch (OCR mode: stage1→2→3 over the
     text; HTML/PDF mode: parse+classify over the raw bytes).
 
-    Output batches are built as *flat* Arrow arrays (child arrays + offsets
-    for the nested blocks/counters columns) — an order of magnitude cheaper
-    than per-row list-of-dict → pandas → Arrow conversion, which profiling
-    showed dominating worker time once regexes are warm."""
+    ``url, warc_ts, lang, doc_hash`` stay the Arrow arrays Spark sent: a
+    ``TimestampType`` value that round-trips through Python comes back
+    shifted under a non-UTC session time zone.  The computed columns are
+    built by ``record_batch``; a ``Block`` is a tuple in ``BLOCK_SCHEMA``
+    order, so it is a ``blocks`` struct as is."""
 
     def gen(batches):
         import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
 
-        block_fields = list(to_arrow_type(BLOCK_SCHEMA))
         names = EXTRACTED_SCHEMA.fieldNames()
-
         for rb in batches:
-            texts = rb.column(rb.schema.get_field_index("payload")).to_pylist()
-
-            status: list[str] = []
-            error: list[str | None] = []
-            out_text: list[str] = []
-            n_chars: list[int] = []
-            n_blocks: list[int] = []
-            b_offsets: list[int] = [0]
-            b_id: list[int] = []
-            b_type: list[str] = []
-            b_text: list[str] = []
-            b_s: list[int] = []
-            b_e: list[int] = []
-            c_offsets: list[int] = [0]
-            c_keys: list[str] = []
-            c_vals: list[int] = []
-
-            for text in texts:
-                res = fn(text)
-                status.append(res.status)
-                error.append(res.error)
-                out_text.append(res.text)
-                n_chars.append(len(res.text))
-                n_blocks.append(len(res.blocks))
-                for b in res.blocks:
-                    b_id.append(b.block_id)
-                    b_type.append(b.block_type)
-                    b_text.append(b.text)
-                    b_s.append(b.span_start)
-                    b_e.append(b.span_end)
-                b_offsets.append(len(b_id))
-                for k, v in res.counters.items():
-                    c_keys.append(k)
-                    c_vals.append(int(v))
-                c_offsets.append(len(c_keys))
-
-            blocks_arr = pa.ListArray.from_arrays(
-                pa.array(b_offsets, pa.int32()),
-                pa.StructArray.from_arrays(
-                    [
-                        pa.array(b_id, pa.int64()),
-                        pa.array(b_type, pa.string()),
-                        pa.array(b_text, pa.string()),
-                        pa.array(b_s, pa.int64()),
-                        pa.array(b_e, pa.int64()),
-                    ],
-                    fields=block_fields,
-                ),
-            )
-            counters_arr = pa.MapArray.from_arrays(
-                pa.array(c_offsets, pa.int32()),
-                pa.array(c_keys, pa.string()),
-                pa.array(c_vals, pa.int64()),
-            )
+            rows = []
+            for payload in rb.column("payload").to_pylist():
+                r = fn(payload)
+                # counters values must be ints (a bool is rejected by the
+                # int64 map): _flatten_counters casts bools, and every other
+                # producer counts with len/sum/+= 1
+                rows.append(
+                    (r.status, r.error, r.text, len(r.text), len(r.blocks),
+                     r.blocks, r.counters)
+                )
+            computed = record_batch(rows, _COMPUTED_SCHEMA)
             yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(rb.schema.get_field_index("url")),
-                    rb.column(rb.schema.get_field_index("warc_ts")),
-                    rb.column(rb.schema.get_field_index("lang")),
-                    rb.column(rb.schema.get_field_index("doc_hash")),
-                    pa.array(status, pa.string()),
-                    pa.array(error, pa.string()),
-                    pa.array(out_text, pa.string()),
-                    pa.array(n_chars, pa.int64()),
-                    pa.array(n_blocks, pa.int32()),
-                    blocks_arr,
-                    counters_arr,
-                ],
+                [*(rb.column(c) for c in names[:4]), *computed.columns],
                 names=names,
             )
 

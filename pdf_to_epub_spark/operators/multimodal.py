@@ -110,8 +110,6 @@ def decode_media(raw: bytes, container: str) -> dict:
         }
     if container == "riff":
         rate, nch, samples = mc.decode_wav(raw)
-        if rate == 0:
-            raise mc.UnsupportedMedia("WAV: zero frame rate")
         rms = (
             (sum(s * s for s in samples) / len(samples)) ** 0.5
             if samples else 0.0

@@ -10,7 +10,11 @@ types are written down.  The operators' row stages (content-defined
 chunking, Unicode normalization, bigram-LM scoring, media features and
 fingerprints) and the TFRecord reader are row functions on the same
 stage, so no caller writes its types twice or meets pandas dtype
-inference (a nullable 64-bit hash column inferred as float64).
+inference (a nullable 64-bit hash column inferred as float64).  The
+extraction stage (``operators/extract``) builds its computed columns with
+`record_batch` and passes its input columns through as Arrow arrays: a
+``TimestampType`` column must not round-trip through a row function,
+which shifts it by the session time zone when that is not UTC.
 
 A writer (``documents_as_*``) is the inverse: `render_documents` runs
 its ``make(doc_id, text)`` per document through the same stage, so the

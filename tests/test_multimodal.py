@@ -312,13 +312,14 @@ def test_media_fingerprints_isolate_codec_failures(spark, monkeypatch):
 
     bmp = make_bmp(8, 8, lambda x, y: (x * 30, y * 30, 0))
     media = spark.createDataFrame(
-        [(0, _TRUNCATED_WAV), (1, _WAV), (2, bmp)],
+        [(0, _TRUNCATED_WAV), (1, _WAV), (2, bmp), (3, _ZERO_RATE_WAV)],
         "media_id long, payload binary",
     )
     got = {r.media_id: tuple(r) for r in media_fingerprints(media).collect()}
     assert got[0] == (0, None, None, "unsupported")
     assert got[1][1] == "audio" and got[1][3] == "ok"
     assert got[2][1] == "image" and got[2][3] == "ok"
+    assert got[3] == (3, None, None, "unsupported")
 
     def crash(raw):
         raise ValueError("codec crashed")

@@ -401,11 +401,15 @@ def test_bucketed_layout_extraction_is_shuffle_free(spark, tmp_path):
     assert plan_has_exchange(extract_documents(docs, salt_partitions=8))
 
 
-def test_extraction_modes_share_one_narrow_stage(docs_df):
+def test_extraction_modes_share_one_narrow_stage(spark, docs_df):
     """Every extraction mode is the scan feeding one MapInArrow, with no
     Exchange when unsalted.  OCR mode over pages that carry ``html``
     hashes the page JVM-side: only the (string) text crosses into Python,
-    while the HTML and PDF modes ship the binary page."""
+    while the HTML and PDF modes ship the binary page.  ``url, warc_ts,
+    lang, doc_hash`` pass through unchanged, nulls included, under a
+    non-UTC session time zone."""
+    import datetime
+
     from pdf_to_epub_spark.operators import (
         extract_html_documents,
         extract_pdf_documents,
@@ -416,6 +420,26 @@ def test_extraction_modes_share_one_narrow_stage(docs_df):
         extract_html_documents: "binary",
         extract_pdf_documents: "binary",
     }
+    edge = spark.createDataFrame(
+        [
+            ("doc://no-ts", None, b"<p>no time</p>", "no time", "en"),
+            ("doc://no-lang", datetime.datetime(1969, 7, 20, 20, 17),
+             b"<p>no lang</p>", "no lang", None),
+            ("doc://no-payload", datetime.datetime(2025, 1, 1), None, None, "fr"),
+        ],
+        PAGES_SCHEMA,
+    )
+    pages = docs_df.unionByName(edge)
+    cols = ["url", "warc_ts", "lang", "doc_hash"]
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        want = {r.url: r for r in with_doc_hash(pages).select(cols).collect()}
+        for extract in modes:
+            got = {r.url: r for r in extract(pages).select(cols).collect()}
+            assert got == want, extract.__name__
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
     for extract, payload_type in modes.items():
         plan = extract(docs_df)._jdf.queryExecution().executedPlan()  # noqa: SLF001
         nodes = [n for n, _ in _plan_paths(plan)]
